@@ -17,23 +17,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession
 
-from openmsistream_spark.queries import QUERIES
+from openmsistream_spark.catalog import load_all
 
-# Registered out-of-band (not from queries.py) so landing new queries
-# does not dirty the byte-identity of every already-verified catalog
-# entry's source closure — see queries_extras.py module docstring.
-import openmsistream_spark.queries_extras  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras2  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras3  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras4  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras5  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras6  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras7  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras8  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras9  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras10  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras11  # noqa: E402,F401  isort: skip
-import openmsistream_spark.queries_extras12  # noqa: E402,F401  isort: skip
+# The extras modules register out-of-band (not from queries.py) so
+# landing new queries does not dirty the byte-identity of every
+# already-verified catalog entry's source closure — see
+# queries_extras.py module docstring.
+QUERIES = load_all()
 
 
 def entry(spark: SparkSession) -> DataFrame:

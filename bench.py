@@ -19,21 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from openmsistream_spark.queries import QUERIES
+from openmsistream_spark.catalog import load_all
 from openmsistream_spark.session import get_spark
 
-import openmsistream_spark.queries_extras  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras2  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras3  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras4  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras5  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras6  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras7  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras8  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras9  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras10  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras11  # noqa: E402,F401  registers extras
-import openmsistream_spark.queries_extras12  # noqa: E402,F401  registers extras
+QUERIES = load_all()
 
 HEADLINE = [
     "q1_pricing_summary",

@@ -172,12 +172,11 @@ def build_parser() -> argparse.ArgumentParser:
     )
     cc.add_argument(
         "--ledger-backend", default="auto",
-        choices=["auto", "parquet", "log", "delta"],
+        choices=["auto", "parquet", "log"],
         help="durable-ledger storage backend: 'log' appends O(batch) "
         "delta segments with fold-forward compaction (the unbounded-"
-        "ledger choice); 'parquet' rewrites atomically; 'delta' needs "
-        "delta-spark; 'auto' honours an existing ledger's on-disk "
-        "format, else picks delta when usable, else log for fresh "
+        "ledger choice); 'parquet' rewrites atomically; 'auto' honours "
+        "an existing ledger's on-disk format, else picks log for fresh "
         "ledger paths (these grow without bound)",
     )
     cc.add_argument(

@@ -84,13 +84,13 @@ def incremental_exact_dedup(
 
     ``registry`` is a ``make_registry(...)`` instance keyed on
     ``content_hash`` (operators/registry.py — parquet atomic-rename or
-    Delta MERGE backend). The ledger holds 32-hex hashes + the canonical
-    id + the admitting ``run_id``, never text: at 100 TB of corpus the
-    ledger is ~60 bytes/doc. The batch-vs-ledger check is an anti-join
-    on the hash (the ledger side is a hash-keyed table scan — Delta's
-    MERGE path keeps it incremental); within-batch duplicates collapse
-    to min id first, so exactly one row per new hash lands in the
-    ledger.
+    log-structured backend). The ledger holds 32-hex hashes + the
+    canonical id + the admitting ``run_id``, never text: at 100 TB of
+    corpus the ledger is ~60 bytes/doc. The batch-vs-ledger check is an
+    anti-join on the hash (the ledger side is a hash-keyed table scan —
+    the log backend's O(batch) appends keep writes incremental);
+    within-batch duplicates collapse to min id first, so exactly one row
+    per new hash lands in the ledger.
 
     Recovery story: the ledger upsert is the ONLY materialization — the
     returned frame's plan reads the (already-committed) post-upsert

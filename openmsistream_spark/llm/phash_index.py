@@ -312,6 +312,14 @@ class FingerprintProbeSidecar:
         if resize not in ("auto", "manual"):
             raise ValueError(f"resize={resize!r} (have 'auto'|'manual')")
         self.resize = resize
+        if max_m_bits < 8 or max_m_bits & (max_m_bits - 1):
+            # the clamp hands max_m_bits verbatim to bloom_build_chunked,
+            # which needs whole bytes and whole 2^25-bit chunks past 2^30:
+            # any power of two >= 8 satisfies both
+            raise ValueError(
+                f"max_m_bits={max_m_bits}: mask growth clamps to this "
+                "size, so it must be a power of two >= 8"
+            )
         if max(combo_m_bits, id_m_bits) > max_m_bits:
             raise ValueError(
                 f"mask of {max(combo_m_bits, id_m_bits)} bits exceeds the "
@@ -324,6 +332,7 @@ class FingerprintProbeSidecar:
             )
         self.max_m_bits = max_m_bits
         base = ledger_path.rstrip("/") + ".probeidx"
+        self.path = base
         # the index rides the log backend: O(batch) appends, sorted
         # segments for combo_key row-group pruning, insert-only union
         # reads (duplicate rows after a crash-repair are benign here)
@@ -348,9 +357,6 @@ class FingerprintProbeSidecar:
         # in-memory state, populated by load_or_init
         self._combo = _MaskState(combo_m_bits, k)
         self._ids = _MaskState(id_m_bits, k)
-        #: run rows still inline in a pre-runs-log meta table — carried
-        #: until the next commit migrates them into the run log
-        self._legacy_runs: list[str] | None = None
         self.n_items = 0
         self.snap_id: str | None = None
         self.delta_seq = 0
@@ -367,11 +373,10 @@ class FingerprintProbeSidecar:
     def covered(self) -> set[str]:
         """Committed run ids — introspection/test surface only (an
         O(runs) driver collect; no per-batch path materializes this)."""
-        out = set(self._legacy_runs or ())
         df = self.runs.read()
-        if df is not None:
-            out.update(r.run_id for r in df.select("run_id").collect())
-        return out
+        if df is None:
+            return set()
+        return {r.run_id for r in df.select("run_id").collect()}
 
     @property
     def id_bloom(self) -> BloomFilter:
@@ -389,13 +394,17 @@ class FingerprintProbeSidecar:
         """Read the meta table if present; refuse a params mismatch
         (a silently changed combo budget would re-derive different
         probe keys than the index holds — the same refusal discipline
-        as the streaming params sidecar). On a session-cache token hit
-        the masks are adopted in memory — no mask I/O at all."""
+        as the streaming params sidecar), and refuse a meta table in a
+        layout this class does not write (masks inline in the meta
+        table, or covered runs inline instead of in the run log). On a
+        session-cache token hit the masks are adopted in memory — no
+        mask I/O at all."""
         df = self.meta.read()
         if df is None:
             return
-        legacy = "snap_id" not in df.columns
         rows = df.collect()
+        if "snap_id" not in df.columns or any(r.kind == "run" for r in rows):
+            raise self._refusal("meta table is in an unsupported older layout")
         meta = next(r for r in rows if r.kind == "meta")
         stored = (meta.bits, meta.blocks, meta.max_hamming)
         if stored != (self.bits, self.blocks, self.max_hamming):
@@ -410,19 +419,9 @@ class FingerprintProbeSidecar:
             )
         self.n_items = meta.n_items
         self.k = meta.k
-        # run rows inline in the meta table = a pre-runs-log sidecar;
-        # the next commit migrates them into the run log (they are
-        # committed coverage — masks/index already hold their bits)
-        self._legacy_runs = sorted(
-            r.run_id for r in rows if r.kind == "run"
-        ) or None
-        self.snap_id = None if legacy else meta.snap_id
-        self.delta_seq = 0 if self.snap_id is None else int(meta.delta_seq)
-        n_keys = (
-            self.n_items * self._n_combos
-            if legacy or meta.n_keys is None
-            else int(meta.n_keys)
-        )
+        self.snap_id = meta.snap_id
+        self.delta_seq = int(meta.delta_seq)
+        n_keys = int(meta.n_keys)
         token = (
             self.snap_id,
             self.delta_seq,
@@ -439,32 +438,16 @@ class FingerprintProbeSidecar:
         ):
             _, _, self._combo, self._ids, self.delta_bytes = cached
             return
-        if legacy:
-            # pre-snapshot layout: masks chunked inline in the meta
-            # table (read once; the next commit migrates to the
-            # snapshot+delta layout via the snap_id-None snapshot rule)
-            carr = np.frombuffer(
-                self._join_mask(rows, "cmask", meta.m_bits), dtype=np.uint8
-            ).copy()
-            iarr = np.frombuffer(
-                self._join_mask(rows, "imask", meta.id_m_bits), dtype=np.uint8
-            ).copy()
-            self.delta_bytes = 0
-        else:
-            blobs = self._read_blobs(f"{self.masks_path}/snap-{self.snap_id}")
-            carr = self._as_mask(blobs.get("cmask", b""), meta.m_bits, "cmask")
-            iarr = self._as_mask(
-                blobs.get("imask", b""), meta.id_m_bits, "imask"
-            )
-            self.delta_bytes = 0
-            for s in range(1, self.delta_seq + 1):
-                d = self._read_blobs(
-                    f"{self.masks_path}/delta-{self.snap_id}-{s}"
-                )
-                for key, arr in (("cpos", carr), ("ipos", iarr)):
-                    pos = np.frombuffer(d.get(key, b""), dtype=np.int64)
-                    apply_packed(arr, *pack_positions(pos))
-                    self.delta_bytes += pos.nbytes
+        blobs = self._read_blobs(f"{self.masks_path}/snap-{self.snap_id}")
+        carr = self._as_mask(blobs.get("cmask", b""), meta.m_bits, "cmask")
+        iarr = self._as_mask(blobs.get("imask", b""), meta.id_m_bits, "imask")
+        self.delta_bytes = 0
+        for s in range(1, self.delta_seq + 1):
+            d = self._read_blobs(f"{self.masks_path}/delta-{self.snap_id}-{s}")
+            for key, arr in (("cpos", carr), ("ipos", iarr)):
+                pos = np.frombuffer(d.get(key, b""), dtype=np.int64)
+                apply_packed(arr, *pack_positions(pos))
+                self.delta_bytes += pos.nbytes
         self._combo = _MaskState(meta.m_bits, meta.k, carr, n_keys)
         self._ids = _MaskState(meta.id_m_bits, meta.k, iarr, self.n_items)
         self._cache_put(token)
@@ -486,26 +469,19 @@ class FingerprintProbeSidecar:
             self.delta_bytes,
         )
 
-    @staticmethod
-    def _join_mask(rows, kind: str, m_bits: int) -> bytes:
-        chunks = sorted(
-            ((r.chunk, bytes(r.mask)) for r in rows if r.kind == kind)
+    def _refusal(self, what: str) -> ValueError:
+        """The refusal for a sidecar this class cannot load: the sidecar
+        is derived state, so the fix is always to delete it and let
+        ``repair()`` rebuild it from the ledger."""
+        return ValueError(
+            f"probe sidecar at {self.path}: {what} — delete {self.path} "
+            "and repair() rebuilds it from the ledger"
         )
-        mask = b"".join(c for _, c in chunks)
-        if len(mask) != m_bits // 8:
-            raise ValueError(
-                f"probe sidecar {kind} mask is {len(mask)} bytes, expected "
-                f"{m_bits // 8} — sidecar corrupt; delete it to force a "
-                "rebuild from the ledger"
-            )
-        return mask
 
     def _as_mask(self, raw: bytes, m_bits: int, kind: str) -> np.ndarray:
         if len(raw) != m_bits // 8:
-            raise ValueError(
-                f"probe sidecar {kind} mask is {len(raw)} bytes, expected "
-                f"{m_bits // 8} — sidecar corrupt; delete it to force a "
-                "rebuild from the ledger"
+            raise self._refusal(
+                f"{kind} mask is {len(raw)} bytes, expected {m_bits // 8}"
             )
         return np.frombuffer(raw, dtype=np.uint8).copy()
 
@@ -578,7 +554,7 @@ class FingerprintProbeSidecar:
         commit fully intact (heal = repair of the uncovered rows).
         ONE row — covered runs live in the run log (``_log_runs``),
         so the rewrite is O(1) in ledger age, not O(total runs)."""
-        if self.snap_id is None:  # first commit / legacy migration
+        if self.snap_id is None:  # first commit
             self._write_snapshot()
         import pandas as pd
 
@@ -617,22 +593,6 @@ class FingerprintProbeSidecar:
         )
 
     # ------------------------------------------------------- run log
-
-    def _migrate_legacy_runs(self) -> None:
-        """One-time migration of run rows found inline in a legacy
-        meta table into the run log. Runs BEFORE the meta commit that
-        drops them: the runs are already-committed coverage (their
-        bits are in the committed masks/index), so logging them early
-        is always safe — a crash in between leaves them present in
-        BOTH places, and coverage reads de-duplicate."""
-        if not self._legacy_runs:
-            return
-        self.runs.upsert(
-            self.spark.createDataFrame(
-                [(r,) for r in self._legacy_runs], "run_id string"
-            )
-        )
-        self._legacy_runs = None
 
     def _log_runs(self, run_ids: DataFrame) -> None:
         """Append newly covered run ids — one O(batch) run-log delta
@@ -969,7 +929,6 @@ class FingerprintProbeSidecar:
         try:
             if not n_admitted:
                 return
-            self._migrate_legacy_runs()
             # the exploded combo rows feed TWO actions (index append
             # + position collect) — pin so the 56× explode and its
             # hashing run once, not per consumer. DISK_ONLY: the
@@ -1016,7 +975,6 @@ class FingerprintProbeSidecar:
                 self._explode(ledger.select("media_id", "fingerprint")).limit(0)
             )
             self._reset_masks()
-        self._migrate_legacy_runs()
         uncovered = ledger
         covered_df = self.runs.read()
         if covered_df is not None:
@@ -1056,7 +1014,6 @@ class FingerprintProbeSidecar:
                 exploded.unpersist()
 
     def _clear_runs(self) -> None:
-        self._legacy_runs = None
         if self.runs.exists():
             self.runs.replace(
                 self.spark.createDataFrame([], "run_id string")

@@ -5,12 +5,12 @@ The reference keeps producer/consumer progress in `;`-delimited CSV
 (reference: utilities/dataclass_table.py:44-213,
 file_registry/producer_file_registry.py:18-326,
 stream_handler_registries.py:19-445). Here a registry is a parquet
-directory + a keyed-upsert helper (MERGE semantics without Delta:
-anti-join the old rows on key, union the new, overwrite atomically via a
-staging path). At cluster scale ``DeltaRegistry`` (via
-``make_registry``, auto-selected when delta-spark is importable) backs
-the same API with transactional MERGE INTO — matched-file rewrites
-instead of O(table) per call — without call-site changes.
+directory + a keyed-upsert helper (MERGE semantics: anti-join the old
+rows on key, union the new, overwrite atomically via a staging path).
+For ledgers that grow without bound, ``LogStructuredRegistry`` (via
+``make_registry``) backs the same API with O(batch) appends and
+fold-forward compaction instead of O(table) per call, without
+call-site changes.
 
 All filesystem operations (exists / rename / recursive delete) go
 through the Hadoop FileSystem API resolved from the registry URI, so a
@@ -123,7 +123,7 @@ class ParquetRegistry:
         than merge them by key (ledger compaction, shard folding).
 
         Same atomicity as every other write (staged write + rename on
-        the parquet backend, a single transaction-log commit on Delta),
+        the parquet backend, a new base segment on the log backend),
         but NO key-level coordination: a replace that interleaves with a
         concurrent ``upsert`` can drop the upsert's rows. Callers must
         serialize replaces with any live writer of the same registry —
@@ -135,8 +135,7 @@ class ParquetRegistry:
     def upsert(self, updates: DataFrame) -> None:
         """R2 — MERGE: replace rows whose key matches, append the rest.
         Duplicate-key rows in ``updates`` collapse to one (the table is
-        keyed); same semantics on the Delta backend, where duplicate
-        MERGE source rows would otherwise be a runtime error."""
+        keyed); same semantics on the log backend."""
         updates = updates.dropDuplicates(self.key_cols)
         current = self.read()
         if current is None:
@@ -202,79 +201,6 @@ class ParquetRegistry:
             )
 
 
-class DeltaRegistry(ParquetRegistry):
-    """Delta-backed registry: ``upsert``/``delete`` become transactional
-    MERGE INTO — file-level rewrite of MATCHED files only, not the
-    O(table)-per-call full rewrite the parquet backend pays. The durable
-    state of a 1000-executor pipeline (the reference's registries,
-    producer_file_registry.py:18-326) wants exactly this. Same API, so
-    call sites don't change; ``make_registry`` picks the backend.
-
-    Requires the ``delta-spark`` package AND a session with the Delta
-    SQL extension + catalog configured.
-    """
-
-    def __init__(self, spark: SparkSession, path: str, key_cols: list[str]):
-        from delta.tables import DeltaTable  # raises if delta-spark absent
-
-        super().__init__(spark, path, key_cols)
-        self._delta_table = DeltaTable
-
-    def read(self) -> DataFrame | None:
-        if not self.exists():
-            return None
-        return self.spark.read.format("delta").load(self.path)
-
-    def _overwrite(self, df: DataFrame) -> None:
-        # Delta commits are atomic via the transaction log — no staged
-        # rename dance needed
-        df.write.format("delta").mode("overwrite").option(
-            "overwriteSchema", "true"
-        ).save(self.path)
-
-    def _merge_condition(self) -> str:
-        return " AND ".join(f"t.{k} <=> s.{k}" for k in self.key_cols)
-
-    def upsert(self, updates: DataFrame) -> None:
-        """R2 — MERGE INTO: update matched keys, insert the rest;
-        unmatched existing rows are untouched (no rewrite). Duplicate-key
-        source rows collapse first — Delta raises on multiple source rows
-        matching one target (parquet-backend parity).
-
-        Schema evolution: unlike the parquet backend (which null-fills
-        via unionByName(allowMissingColumns)), MERGE INTO only picks up
-        NEW source columns when the session sets
-        ``spark.databricks.delta.schema.autoMerge.enabled=true`` —
-        set it before upserting a ledger whose schema grew (e.g. a
-        pre-run_id dedup ledger)."""
-        updates = updates.dropDuplicates(self.key_cols)
-        if not self.exists():
-            updates.write.format("delta").save(self.path)
-            return
-        (
-            self._delta_table.forPath(self.spark, self.path)
-            .alias("t")
-            .merge(updates.alias("s"), self._merge_condition())
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def delete(self, keys: DataFrame) -> None:
-        if not self.exists():
-            return
-        (
-            self._delta_table.forPath(self.spark, self.path)
-            .alias("t")
-            .merge(
-                keys.select(*self.key_cols).distinct().alias("s"),
-                self._merge_condition(),
-            )
-            .whenMatchedDelete()
-            .execute()
-        )
-
-
 class LogStructuredRegistry(ParquetRegistry):
     """Log-structured registry: upsert/delete APPEND a delta segment
     (O(batch) write) instead of rewriting the whole table; reads fold
@@ -285,9 +211,8 @@ class LogStructuredRegistry(ParquetRegistry):
     Why: the plain parquet backend's ``upsert`` is a full scan+rewrite
     per call — measured at +0.35 s per +10k ledger rows per streaming
     micro-batch (STRESS_MEDIA_LEDGER.json, round 14), the ingest
-    path's only super-constant cost. Delta Lake MERGE is the managed
-    fix; this backend is the dependency-free one, built on the repo's
-    own fold-forward discipline (streaming/ledger_fold.py). Amortized
+    path's only super-constant cost. This backend is the
+    dependency-free fix, built on the repo's own fold-forward discipline (streaming/ledger_fold.py). Amortized
     write cost per row is O(1): compaction fires when delta bytes
     reach base bytes, so the ledger doubles between folds and the
     geometric series telescopes (the dynamic-array argument).
@@ -621,6 +546,11 @@ def _is_log_layout(fs: HadoopFS, path: str) -> bool:
     return False
 
 
+def _is_fresh(fs: HadoopFS, path: str) -> bool:
+    """True iff ``path`` is missing or an empty directory."""
+    return not fs.exists(path) or (not fs.list_dirs(path) and fs.size_bytes(path) == 0)
+
+
 def make_registry(
     spark: SparkSession,
     path: str,
@@ -630,15 +560,13 @@ def make_registry(
     major_compaction: str = "auto",
     prefer: str | None = None,
 ) -> ParquetRegistry:
-    """Registry factory: ``backend`` = "parquet", "log", "delta", or
-    "auto".
+    """Registry factory: ``backend`` = "parquet", "log", or "auto".
 
     ``prefer="log"`` (only meaningful under "auto") declares an
     unbounded-ingest call site — streaming sinks, the curate CLI's
     dedup ledgers: a FRESH path then gets the log backend instead of
-    parquet (Delta still wins when actually usable — it is the managed
-    O(batch) MERGE backend). Existing registries always keep their
-    on-disk format regardless of preference.
+    parquet. Existing registries always keep their on-disk format
+    regardless of preference.
 
     "log" is the log-structured backend — O(batch) appends +
     fold-forward compaction — the right choice for streaming ingest
@@ -649,16 +577,12 @@ def make_registry(
     ``major_compaction="manual"`` keeps the O(base) full fold off the
     writer's path (the operator schedules ``compact_now()``).
 
-    "auto" first honours what is already on disk: a path holding
-    seg-* segment directories reopens as the log backend it was
-    written by (so a later run that drops an explicit
-    ``backend="log"`` cannot misread the ledger as empty parquet).
-    Otherwise it picks Delta only when it would actually work:
-    delta-spark importable AND the session built with the Delta SQL
-    extension AND ``path`` is empty or already a Delta table
-    (``_delta_log`` present). An existing parquet-format registry
-    therefore keeps its backend — importability alone must not flip
-    the on-disk format out from under earlier writes.
+    "auto" honours what is already on disk: a path holding seg-*
+    segment directories reopens as the log backend it was written by
+    (so a later run that drops an explicit ``backend="log"`` cannot
+    misread the ledger as empty parquet). A fresh path with
+    ``prefer="log"`` gets the log backend; anything else — including
+    an existing parquet-format registry — gets the parquet backend.
 
     Migration parquet → log: read the parquet registry, write its
     table as the log ledger's first base —
@@ -667,81 +591,42 @@ def make_registry(
     — then point the caller at ``new_path`` (in-place reuse of the
     same path is refused by the format guards in both directions).
     """
+    if backend not in ("auto", "parquet", "log"):
+        raise ValueError(f"backend={backend!r} (have 'auto'|'parquet'|'log')")
+    fs = HadoopFS(spark, path)
+    log_layout = _is_log_layout(fs, path)
+    if backend == "auto":
+        # 1. an existing seg-* layout reopens as log (a ledger written
+        #    with backend="log" must not be misread as empty parquet);
+        # 2. a fresh path declared unbounded-ingest gets log;
+        # 3. anything else gets parquet
+        if log_layout or (prefer == "log" and _is_fresh(fs, path)):
+            backend = "log"
+        else:
+            backend = "parquet"
     if backend == "parquet":
-        reg = ParquetRegistry(spark, path, key_cols)
-        if _is_log_layout(reg.fs, path):
+        if log_layout:
             raise ValueError(
                 f"registry at {path} is log-structured (seg-* segments); "
                 "reading it as parquet would fail or miss rows — use "
                 "backend='log' (or 'auto', which detects it)"
             )
-        return reg
-    if backend == "log":
-        reg = LogStructuredRegistry(
-            spark,
-            path,
-            key_cols,
-            insert_only=insert_only,
-            major_compaction=major_compaction,
-        )
-        if reg.fs.exists(path) and not reg.exists():
-            # non-empty dir with no seg-* children = some other format;
-            # reading it as an empty ledger would silently re-admit
-            # everything the old ledger had blocked
-            if reg.fs.list_dirs(path) or reg.fs.size_bytes(path) > 0:
-                raise ValueError(
-                    f"registry at {path} exists but is not log-structured; "
-                    "use its original backend or migrate it first"
-                )
-        return reg
-    if backend == "delta":
-        reg = DeltaRegistry(spark, path, key_cols)  # ImportError surfaces
-        fs = reg.fs
-        if fs.exists(path) and not fs.exists(path.rstrip("/") + "/_delta_log"):
-            raise ValueError(
-                f"registry at {path} exists but is not a Delta table; "
-                "use backend='parquet' or migrate it first"
-            )
-        return reg
-    fs0 = HadoopFS(spark, path)
-    if _is_log_layout(fs0, path):
-        # honour the on-disk format: a ledger written with
-        # backend="log" must reopen as log even when the caller drops
-        # the explicit backend (the reopen-with-default footgun)
-        return LogStructuredRegistry(
-            spark,
-            path,
-            key_cols,
-            insert_only=insert_only,
-            major_compaction=major_compaction,
-        )
-    def _fallback() -> ParquetRegistry:
-        # fresh path + a declared unbounded-ingest preference → the
-        # log backend (O(batch) appends); an EXISTING parquet registry
-        # always keeps its on-disk format
-        fresh = not fs0.exists(path) or (
-            not fs0.list_dirs(path) and fs0.size_bytes(path) == 0
-        )
-        if fresh and prefer == "log":
-            return LogStructuredRegistry(
-                spark,
-                path,
-                key_cols,
-                insert_only=insert_only,
-                major_compaction=major_compaction,
-            )
         return ParquetRegistry(spark, path, key_cols)
-
-    try:
-        import delta.tables  # noqa: F401
-    except ImportError:
-        return _fallback()
-    ext = spark.conf.get("spark.sql.extensions", "") or ""
-    if "DeltaSparkSessionExtension" not in ext:
-        return _fallback()
-    if fs0.exists(path) and not fs0.exists(path.rstrip("/") + "/_delta_log"):
-        return _fallback()
-    return DeltaRegistry(spark, path, key_cols)
+    if not log_layout and not _is_fresh(fs, path):
+        # non-empty dir with no seg-* children = some other format;
+        # reading it as an empty ledger would silently re-admit
+        # everything the old ledger had blocked
+        raise ValueError(
+            f"registry at {path} exists but is not log-structured; "
+            "use its original backend or migrate it first"
+        )
+    return LogStructuredRegistry(
+        spark,
+        path,
+        key_cols,
+        insert_only=insert_only,
+        major_compaction=major_compaction,
+    )
 
 
 def chunk_ledger(chunks: DataFrame, delivered: DataFrame, key: str = "rel_path") -> DataFrame:

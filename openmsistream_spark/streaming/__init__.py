@@ -3,7 +3,7 @@ from .anomaly import (
     compact_moment_ledger,
     score_batch_against_ledger,
 )
-from .assembly import streaming_assemble, tws_available
+from .assembly import streaming_assemble
 from .curation import curate_document_stream, curation_sink
 from .sinks import reconstruction_sink, write_reconstructed_files
 from .sources import file_chunk_stream, kafka_chunk_stream
@@ -18,7 +18,6 @@ __all__ = [
     "sessionize_stream",
     "text_index_sink",
     "streaming_assemble",
-    "tws_available",
     "curate_document_stream",
     "curation_sink",
     "file_chunk_stream",

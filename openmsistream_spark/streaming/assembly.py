@@ -33,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from ..schemas import (
     CODE_COMPLETE_OFFSETS_ONLY,
@@ -266,217 +265,11 @@ def _assemble_group(
         )
 
 
-class _AssemblyProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` port of the assembly fold — the
-    modern stateful API (PySpark 4.x): typed state variables instead of
-    one packed tuple, per-entry MapState instead of rewriting the whole
-    offset/payload arrays on every chunk, and first-class timers for the
-    partial heartbeat.
-
-    State layout (per rel_path key):
-      - ``gen`` ValueState (n_total, file_hash, file_mtime, n_received):
-        the generation tuple + a maintained received-count so completion
-        checks never scan the map. n_total < 0 is the completion
-        tombstone (same convention as the legacy path).
-      - ``chunks`` MapState offset → payload: one state-store entry per
-        chunk, so a late chunk writes one RocksDB key instead of
-        round-tripping the entire accumulated buffer (the
-        applyInPandasWithState path must rewrite its full arrays each
-        batch — at 100 TB that rewrite is the dominant state cost).
-
-    Semantics are identical to ``_assemble_group``: offset dedup,
-    generation adoption/corruption per ``generation_decision``,
-    completion tombstones, IN_PROGRESS heartbeats on timer expiry with
-    state retained (late chunks are never dropped).
-    """
-
-    def __init__(self, partial_timeout_ms: int | None, buffer_bytes: bool):
-        self._timeout_ms = partial_timeout_ms
-        self._buffer = buffer_bytes
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._gen = handle.getValueState(
-            "gen",
-            "n_total_chunks long, file_hash binary, file_mtime double, n_received long",
-        )
-        self._chunks = handle.getMapState("chunks", "offset long", "data binary")
-
-    def close(self) -> None:
-        pass
-
-    def _rearm(self, timer_values) -> None:
-        if self._timeout_ms:
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                timer_values.getCurrentProcessingTimeInMs() + self._timeout_ms
-            )
-
-    def _disarm(self) -> None:
-        if self._timeout_ms:
-            for t in self._handle.listTimers():
-                self._handle.deleteTimer(t)
-
-    def handleInputRows(self, key, rows, timer_values):
-        import hashlib
-
-        rel_path = key[0]
-        if self._gen.exists():
-            n_total, file_hash, file_mtime, n_received = self._gen.get()
-            file_hash = bytes(file_hash)
-        else:
-            n_total, file_hash, file_mtime, n_received = 0, b"", None, 0
-        tombstone = n_total < 0
-        if tombstone:
-            n_total = -n_total
-
-        corrupt = False
-        for pdf in rows:
-            for row in pdf.itertuples(index=False):
-                row_hash = bytes(row.file_hash)
-                row_n = int(row.n_total_chunks)
-                row_mtime = None if pd.isna(row.file_mtime) else float(row.file_mtime)
-                if tombstone:
-                    if row_hash == file_hash:
-                        if row_n != n_total:
-                            corrupt = True  # same hash, different count
-                        continue  # ALREADY_WRITTEN duplicate
-                    if _adopt_new_generation(
-                        n_total, file_hash, file_mtime, row_n, row_hash, row_mtime,
-                    ):
-                        tombstone = False
-                        self._chunks.clear()
-                        n_received = 0
-                        n_total, file_hash, file_mtime = row_n, row_hash, row_mtime
-                    else:
-                        continue  # stale generation vs the completed one
-                elif n_received == 0 and n_total == 0:
-                    n_total, file_hash, file_mtime = row_n, row_hash, row_mtime
-                elif row_hash != file_hash:
-                    if _adopt_new_generation(
-                        n_total, file_hash, file_mtime, row_n, row_hash, row_mtime,
-                    ):
-                        self._chunks.clear()
-                        n_received = 0
-                        n_total, file_hash, file_mtime = row_n, row_hash, row_mtime
-                    else:
-                        continue  # stale generation chunk — discard
-                elif row_n != n_total:
-                    corrupt = True  # same hash, different count
-                    continue
-                off = int(row.chunk_offset_write)
-                if self._chunks.containsKey((off,)):  # at-least-once dedup
-                    continue
-                self._chunks.updateValue(
-                    (off,), (bytes(row.data) if self._buffer else b"",)
-                )
-                n_received += 1
-
-        corruption_rows = (
-            [
-                {
-                    "rel_path": rel_path,
-                    "n_total_chunks": n_total,
-                    "n_chunks_received": n_received,
-                    "file_hash": file_hash,
-                    "file_mtime": file_mtime,
-                    "file_bytes": None,
-                    "status": CODE_CORRUPTION,
-                }
-            ]
-            if corrupt
-            else []
-        )
-
-        if tombstone:
-            self._gen.update((-n_total, file_hash, file_mtime, 0))
-            self._disarm()  # tombstones never stall
-            out = corruption_rows
-        elif n_total and n_received >= n_total:
-            payload = {
-                int(k[0]): bytes(v[0]) for k, v in self._chunks.iterator()
-            }
-            if self._buffer:
-                body = b"".join(payload[o] for o in sorted(payload))
-                ok = hashlib.sha512(body).digest() == file_hash
-                status = CODE_SUCCESSFULLY_RECONSTRUCTED if ok else CODE_HASH_MISMATCH
-            else:
-                body = None
-                status = CODE_COMPLETE_OFFSETS_ONLY
-            self._chunks.clear()
-            self._gen.update((-n_total, file_hash, file_mtime, 0))
-            self._disarm()
-            out = [
-                {
-                    "rel_path": rel_path,
-                    "n_total_chunks": n_total,
-                    "n_chunks_received": len(payload),
-                    "file_hash": file_hash,
-                    "file_mtime": file_mtime,
-                    "file_bytes": body,
-                    "status": status,
-                }
-            ] + corruption_rows
-        else:
-            self._gen.update((n_total, file_hash, file_mtime, n_received))
-            self._rearm(timer_values)
-            out = corruption_rows
-        if out:
-            yield pd.DataFrame(out)
-
-    def handleExpiredTimer(self, key, timer_values, expired_timer_info):
-        # stalled-partial heartbeat: surface IN_PROGRESS, keep all state
-        if not self._gen.exists():
-            return
-        n_total, file_hash, file_mtime, n_received = self._gen.get()
-        if n_total < 0:  # completed tombstone — nothing to report
-            return
-        self._rearm(timer_values)
-        yield pd.DataFrame(
-            [
-                {
-                    "rel_path": key[0],
-                    "n_total_chunks": n_total,
-                    "n_chunks_received": n_received,
-                    "file_hash": bytes(file_hash),
-                    "file_mtime": file_mtime,
-                    "file_bytes": None,
-                    "status": CODE_IN_PROGRESS,
-                }
-            ]
-        )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def tws_available() -> bool:
-    """Whether ``transformWithStateInPandas`` can run here: its Python
-    state-server client speaks protobuf
-    (pyspark/sql/streaming/stateful_processor_api_client.py imports
-    StateMessage_pb2), so the ``protobuf`` package is a hard runtime
-    dependency — without it the TWS driver worker dies during state
-    schema validation with an opaque "worker exited unexpectedly"."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def streaming_assemble(
     chunks: DataFrame,
     key_col: str = "rel_path",
     partial_timeout_ms: int | None = None,
     buffer_bytes: bool = True,
-    engine: str = "auto",
 ) -> DataFrame:
     """Group a (streaming) chunk DataFrame by file and assemble
     statefully; emits one row per completed file.
@@ -491,43 +284,9 @@ def streaming_assemble(
     state keeps only the offset set; completion emits a
     COMPLETE_OFFSETS_ONLY row (null bytes) and the payload reassembles
     downstream via a batch join of the completed keys against the
-    durable chunk log (``operators.assembly.assemble_files``).
-
-    ``engine`` — "tws" runs on ``transformWithStateInPandas`` (typed
-    state, per-entry MapState, first-class timers; requires the RocksDB
-    state store, which this function configures on the session, and the
-    ``protobuf`` package for pyspark's state-server protocol);
-    "apply_in_pandas" is the ``applyInPandasWithState`` fallback;
-    "auto" (default) picks tws when its protobuf dependency is
-    importable, else the fallback."""
+    durable chunk log (``operators.assembly.assemble_files``)."""
     cols = ["n_total_chunks", "file_hash", "file_mtime", "chunk_offset_write", "data"]
     keyed = chunks.selectExpr(f"{key_col} AS rel_path", *cols).groupBy("rel_path")
-    if engine == "auto":
-        engine = "tws" if tws_available() else "apply_in_pandas"
-    if engine == "tws":
-        spark = chunks.sparkSession
-        # transformWithStateInPandas requires the RocksDB state store.
-        # Setting providerClass is SESSION-WIDE — every streaming query
-        # in this session inherits it. Fail loudly if a different
-        # provider was configured deliberately rather than silently
-        # switching the whole session's state backend.
-        current = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if current and current != ROCKSDB_PROVIDER:
-            raise RuntimeError(
-                "assemble_stream(engine='tws') needs the RocksDB state "
-                f"store, but this session pins providerClass={current}. "
-                "Unset it, use a separate session, or pass "
-                "engine='apply_in_pandas' (HDFS-backed state) instead."
-            )
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-        return keyed.transformWithStateInPandas(
-            statefulProcessor=_AssemblyProcessor(partial_timeout_ms, buffer_bytes),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="append",
-            timeMode="ProcessingTime" if partial_timeout_ms else "None",
-        )
-    if engine != "apply_in_pandas":
-        raise ValueError(f"unknown engine {engine!r}: use 'tws' or 'apply_in_pandas'")
     return keyed.applyInPandasWithState(
         # closure captures the timeout by value (survives executor pickling)
         lambda key, pdfs, state: _assemble_group(

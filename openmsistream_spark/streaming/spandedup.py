@@ -30,9 +30,9 @@ gram build, one equi-join against the ledger (keyed lookup shape), one
 combinable (count, first) aggregate within the batch, the per-doc span
 merge, and the insert of the batch's new grams. On the parquet registry
 backend the insert rewrites the table (fine locally / at ledger sizes
-that fit a compaction budget); at 100 TB use the Delta backend, whose
-MERGE writes only touched files — the same backend trade every durable
-ledger in this repo documents.
+that fit a compaction budget); at 100 TB use the log backend, whose
+O(batch) appends write only the batch's rows — the same backend trade
+every durable ledger in this repo documents.
 """
 
 from __future__ import annotations

@@ -2,19 +2,12 @@ import os
 
 import pytest
 
+from openmsistream_spark.catalog import load_all
+
 # Out-of-band catalog registration (see queries_extras.py docstring):
 # every test that iterates QUERIES must see the extras regardless of
 # whether __spark_entry__ was imported first in the pytest process.
-import openmsistream_spark.queries_extras  # noqa: E402,F401
-import openmsistream_spark.queries_extras2  # noqa: E402,F401
-import openmsistream_spark.queries_extras3  # noqa: E402,F401
-import openmsistream_spark.queries_extras4  # noqa: E402,F401
-import openmsistream_spark.queries_extras5  # noqa: E402,F401
-import openmsistream_spark.queries_extras6  # noqa: E402,F401
-import openmsistream_spark.queries_extras7  # noqa: E402,F401
-import openmsistream_spark.queries_extras8  # noqa: E402,F401
-import openmsistream_spark.queries_extras9  # noqa: E402,F401
-import openmsistream_spark.queries_extras10  # noqa: E402,F401
+load_all()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

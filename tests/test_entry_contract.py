@@ -20,6 +20,23 @@ def test_ordered_names_is_a_permutation_of_the_catalog():
     assert len(names) == len(set(names))
 
 
+def test_load_all_registers_extras_in_numeric_order():
+    """catalog.load_all imports queries_extras, queries_extras2 … by
+    numeric suffix (a lexical sort would load extras10 before extras2),
+    and calling it again changes nothing."""
+    from openmsistream_spark.catalog import load_all
+
+    before = list(QUERIES)
+    assert load_all() is QUERIES and list(QUERIES) == before
+    mods = dict.fromkeys(q.fn.__module__.rsplit(".", 1)[1] for q in QUERIES.values())
+    nums = [
+        int(m.removeprefix("queries_extras") or 1)
+        for m in mods
+        if m.startswith("queries_extras")
+    ]
+    assert nums == list(range(1, len(nums) + 1)) and len(nums) >= 12
+
+
 def test_every_query_resolves_source_files():
     for name in QUERIES:
         files = entry._query_source_files(name)

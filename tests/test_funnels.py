@@ -158,9 +158,6 @@ def _ref_funnel(events, steps):
 
 @given(events=_stream)
 @settings(max_examples=20, deadline=None)
-@pytest.mark.slow  # stress/e2e tier: moved out of the default gate
-# so `pytest tests/` fits the driver's verify window (r16 VERDICT #7);
-# runs in the attested full suite (`pytest -m 'slow or not slow'`)
 def test_funnel_property_matches_reference(spark, events):
     rows = [
         (u, _ts(0, 0) + datetime.timedelta(minutes=m), t) for u, m, t in events

@@ -289,18 +289,18 @@ def test_sidecar_snapshot_rollover_bounds_deltas(spark, tmp_path):
     assert got == {"b2"}
 
 
-def test_sidecar_legacy_inline_meta_migrates(spark, tmp_path):
-    """A sidecar written by the pre-snapshot layout (masks chunked
-    inline in the meta table) must load, answer exactly, and migrate
-    to the snapshot+delta layout on its next commit."""
-    import shutil as _sh
-
-    import numpy as np
+@pytest.mark.parametrize("layout", ["inline_masks", "inline_runs"])
+def test_sidecar_legacy_meta_is_refused(spark, tmp_path, layout):
+    """A meta table in a layout this class does not write — masks
+    chunked inline (no snap_id column), or covered runs inline instead
+    of in the run log — is refused at load with the delete-and-repair
+    fix, and deleting the sidecar lets the next probe rebuild it."""
     from pyspark.sql.types import (BinaryType, LongType, StringType,
                                    StructField, StructType)
 
     from openmsistream_spark.llm import phash_index
-    from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
+    from openmsistream_spark.llm.phash_index import (_META_SCHEMA,
+                                                     FingerprintProbeSidecar)
     from openmsistream_spark.operators.registry import (ParquetRegistry,
                                                         make_registry)
 
@@ -310,43 +310,55 @@ def test_sidecar_legacy_inline_meta_migrates(spark, tmp_path):
     _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
     live = FingerprintProbeSidecar(spark, path, 64, 8, 3)
     live.load_or_init()
-    old_schema = StructType(
-        [
-            StructField("kind", StringType()),
-            StructField("chunk", LongType()),
-            StructField("mask", BinaryType()),
-            StructField("run_id", StringType()),
-            StructField("n_items", LongType()),
-            StructField("m_bits", LongType()),
-            StructField("id_m_bits", LongType()),
-            StructField("k", LongType()),
-            StructField("bits", LongType()),
-            StructField("blocks", LongType()),
-            StructField("max_hamming", LongType()),
+    if layout == "inline_masks":
+        schema = StructType(
+            [
+                StructField("kind", StringType()),
+                StructField("chunk", LongType()),
+                StructField("mask", BinaryType()),
+                StructField("run_id", StringType()),
+                StructField("n_items", LongType()),
+                StructField("m_bits", LongType()),
+                StructField("id_m_bits", LongType()),
+                StructField("k", LongType()),
+                StructField("bits", LongType()),
+                StructField("blocks", LongType()),
+                StructField("max_hamming", LongType()),
+            ]
+        )
+        rows = [
+            ("meta", 0, None, None, live.n_items, live.combo_bloom.m_bits,
+             live.id_bloom.m_bits, live.k, 64, 8, 3),
+            ("cmask", 0, live.combo_bloom.mask, None, None, None, None, None,
+             None, None, None),
+            ("imask", 0, live.id_bloom.mask, None, None, None, None, None,
+             None, None, None),
+            ("run", 0, None, "r0", None, None, None, None, None, None, None),
         ]
-    )
-    rows = [
-        ("meta", 0, None, None, live.n_items, live.combo_bloom.m_bits,
-         live.id_bloom.m_bits, live.k, 64, 8, 3),
-        ("cmask", 0, live.combo_bloom.mask, None, None, None, None, None,
-         None, None, None),
-        ("imask", 0, live.id_bloom.mask, None, None, None, None, None,
-         None, None, None),
-        ("run", 0, None, "r0", None, None, None, None, None, None, None),
-    ]
+    else:
+        schema = _META_SCHEMA
+        rows = [
+            ("meta", 0, None, None, live.n_items, live.combo_bloom.m_bits,
+             live.id_bloom.m_bits, live.k, 64, 8, 3, live.snap_id,
+             live.delta_seq, live._combo.n_keys),
+            ("run", 0, None, "r0", None, None, None, None, None, None, None,
+             None, None, None),
+        ]
     ParquetRegistry(spark, f"{path}.probeidx/meta", ["kind", "chunk"]).replace(
-        spark.createDataFrame(rows, old_schema)
+        spark.createDataFrame(rows, schema)
     )
-    _sh.rmtree(f"{path}.probeidx/masks")
     phash_index._STATE_CACHE.clear()
-    # loads via the legacy branch, blocks correctly, and the commit
-    # migrates the masks out of the meta table
+    with pytest.raises(ValueError, match=r"\.probeidx and repair\(\) rebuilds"):
+        FingerprintProbeSidecar(spark, path, 64, 8, 3).load_or_init()
+    with pytest.raises(ValueError, match="older layout"):
+        _run(spark, reg, [("b1", NEAR2), ("b2", LONE)], "r1", sidecar=True)
+    # the documented fix: delete the sidecar; the next probe repairs it
+    shutil.rmtree(f"{path}.probeidx")
     got = _run(spark, reg, [("b1", NEAR2), ("b2", LONE)], "r1", sidecar=True)
     assert got == {"b2"}
-    migrated = FingerprintProbeSidecar(spark, path, 64, 8, 3)
-    migrated.load_or_init()
-    assert migrated.snap_id is not None
-    assert migrated.covered == {"r0", "r1"}
+    rebuilt = FingerprintProbeSidecar(spark, path, 64, 8, 3)
+    rebuilt.load_or_init()
+    assert rebuilt.covered == {"r0", "r1"}
 
 
 def test_sidecar_meta_commit_is_one_row(spark, tmp_path):
@@ -471,6 +483,30 @@ def test_sidecar_mask_growth_clamps_at_envelope(spark, tmp_path):
     got = _run(spark, reg, [("z1", a_fp[some]), ("z2", _fp([59, 61]))], "r1",
                sidecar=True, sidecar_opts=opts)
     assert got == {"z2"}
+
+
+@pytest.mark.parametrize(
+    "max_m_bits, ok",
+    [(3 << 30, False), ((1 << 33) + 8, False), (1 << 33, True)],
+    ids=["3x2^30", "2^33+8", "2^33"],
+)
+def test_sidecar_ctor_refuses_non_power_of_two_envelope(
+    spark, tmp_path, max_m_bits, ok
+):
+    """A max_m_bits the growth clamp could not hand to the chunked
+    mask builder is refused at construction, not at the clamp inside
+    foreachBatch long after configuration."""
+    from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
+
+    def make():
+        return FingerprintProbeSidecar(spark, f"{tmp_path}/led", 64, 8, 3,
+                                       max_m_bits=max_m_bits)
+
+    if ok:
+        assert make().max_m_bits == max_m_bits
+    else:
+        with pytest.raises(ValueError, match="power of two"):
+            make()
 
 
 def test_sidecar_ctor_refuses_mask_beyond_envelope(spark, tmp_path):

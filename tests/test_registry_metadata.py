@@ -11,26 +11,9 @@ def tmp(tmp_path):
     return str(tmp_path)
 
 
-def _has_delta() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-# same contract on all backends; the Delta path runs wherever
-# delta-spark is installed (MERGE INTO instead of full-table rewrite);
-# "log" is the log-structured append+fold backend
-BACKENDS = [
-    "parquet",
-    "log",
-    pytest.param(
-        "delta",
-        marks=pytest.mark.skipif(not _has_delta(), reason="delta-spark not installed"),
-    ),
-]
+# same contract on both backends; "log" is the log-structured
+# append+fold backend
+BACKENDS = ["parquet", "log"]
 
 
 @pytest.mark.parametrize("backend", BACKENDS)
@@ -56,40 +39,40 @@ def test_registry_upsert_lookup_delete(spark, tmp, backend):
 
 
 def test_make_registry_auto_falls_back_to_parquet(spark, tmp):
+    """auto on a fresh path: parquet unless the call site declares
+    unbounded ingest with prefer="log"; an unknown backend (the removed
+    "delta" included) is refused with the valid choices."""
     from openmsistream_spark.operators.registry import (
-        DeltaRegistry,
+        LogStructuredRegistry,
         ParquetRegistry,
         make_registry,
     )
 
     reg = make_registry(spark, f"{tmp}/auto_reg", ["rel_path"])
-    delta_usable = _has_delta() and "DeltaSparkSessionExtension" in (
-        spark.conf.get("spark.sql.extensions", "") or ""
-    )
-    expected = DeltaRegistry if delta_usable else ParquetRegistry
-    assert type(reg) is expected
-    if not _has_delta():
-        with pytest.raises(ImportError):
-            make_registry(spark, f"{tmp}/d_reg", ["rel_path"], backend="delta")
+    assert type(reg) is ParquetRegistry
+    reg = make_registry(spark, f"{tmp}/auto_log", ["rel_path"], prefer="log")
+    assert type(reg) is LogStructuredRegistry
+    with pytest.raises(ValueError, match=r"'delta' \(have 'auto'\|'parquet'\|'log'\)"):
+        make_registry(spark, f"{tmp}/d_reg", ["rel_path"], backend="delta")
 
 
 def test_make_registry_auto_keeps_existing_parquet_backend(spark, tmp):
-    """auto must never flip an existing parquet-format registry to Delta
-    just because delta-spark became importable — no _delta_log, no Delta."""
+    """auto must never flip an existing parquet-format registry to the
+    log backend, even at a call site that prefers log for fresh paths."""
     from openmsistream_spark.operators.registry import ParquetRegistry, make_registry
 
     path = f"{tmp}/existing_pq"
     seed = ParquetRegistry(spark, path, ["rel_path"])
     seed.upsert(spark.createDataFrame([("a", 1)], "rel_path string, n_chunks long"))
-    reg = make_registry(spark, path, ["rel_path"], backend="auto")
-    assert type(reg) is ParquetRegistry
+    for prefer in (None, "log"):
+        reg = make_registry(spark, path, ["rel_path"], backend="auto", prefer=prefer)
+        assert type(reg) is ParquetRegistry
     assert {r.rel_path for r in reg.read().collect()} == {"a"}
 
 
 def test_upsert_collapses_duplicate_key_rows(spark, tmp):
     """Duplicate-key rows in one updates batch collapse to a single row —
-    uniform across backends (Delta MERGE would otherwise raise on
-    multiple source rows matching one target)."""
+    uniform across backends."""
     from openmsistream_spark.operators.registry import ParquetRegistry
 
     reg = ParquetRegistry(spark, f"{tmp}/dup_reg", ["rel_path"])

@@ -262,6 +262,34 @@ def test_streaming_corruption_same_hash_different_count(spark):
     assert list(out[0].status) == ["CORRUPTION"]
 
 
+def test_stale_generation_after_completion_is_ignored(spark):
+    """Once a newer generation completed, a late chunk of the older
+    generation is stale: it emits nothing and keeps the tombstone."""
+    import pandas as pd
+
+    from openmsistream_spark.streaming.assembly import _assemble_group
+
+    old = os.urandom(2 * CS)
+    new = os.urandom(3 * CS)
+    old_rows = [r.asDict() for r in _chunk_rows(spark, "g.bin", old, 1.0).collect()]
+    new_rows = [r.asDict() for r in _chunk_rows(spark, "g.bin", new, 2.0).collect()]
+    state = _FakeState()
+
+    def run(batch_rows):
+        return [
+            df
+            for df in _assemble_group(("g.bin",), [pd.DataFrame(batch_rows)], state)
+            if len(df)
+        ]
+
+    assert run(old_rows[:1]) == []  # partial old generation
+    out = run(new_rows)  # the new generation arrives complete
+    assert list(out[0].status) == ["SUCCESSFULLY_RECONSTRUCTED"]
+    assert bytes(out[0].file_bytes.iloc[0]) == new
+    assert run(old_rows[1:]) == []
+    assert state.get[0] == -len(new_rows)  # tombstone kept
+
+
 def test_streaming_exact_dedup_across_batches(spark, tmpdirs):
     """Duplicates arriving in LATER micro-batches are dropped; the
     watermark-bounded variant holds hash-only state."""
@@ -386,228 +414,3 @@ def test_disk_reconstruction_sink(spark, tmpdirs):
     before = os.stat(target).st_mtime_ns
     write_reconstructed_files(completed, out_dir)
     assert os.stat(target).st_mtime_ns == before
-
-
-# ---- transformWithStateInPandas path (typed state + MapState + timers) ----
-
-
-class _FakeValueState:
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def clear(self):
-        self._v = None
-
-
-class _FakeMapState:
-    def __init__(self):
-        self._m = {}
-
-    def exists(self):
-        return bool(self._m)
-
-    def containsKey(self, k):
-        return tuple(k) in self._m
-
-    def getValue(self, k):
-        return self._m[tuple(k)]
-
-    def updateValue(self, k, v):
-        self._m[tuple(k)] = tuple(v)
-
-    def removeKey(self, k):
-        self._m.pop(tuple(k), None)
-
-    def keys(self):
-        return iter(list(self._m))
-
-    def values(self):
-        return iter(list(self._m.values()))
-
-    def iterator(self):
-        return iter(list(self._m.items()))
-
-    def clear(self):
-        self._m.clear()
-
-
-class _FakeTwsHandle:
-    """StatefulProcessorHandle stand-in: typed states + timer registry."""
-
-    def __init__(self):
-        self.states = {}
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getMapState(self, name, key_schema, value_schema, ttlDurationMs=None):
-        return self.states.setdefault(name, _FakeMapState())
-
-    def listTimers(self):
-        return iter(list(self.timers))
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.remove(ts)
-
-
-class _FakeTimerValues:
-    def getCurrentProcessingTimeInMs(self):
-        return 1_000_000
-
-    def getCurrentWatermarkInMs(self):
-        return -1
-
-
-def _tws_proc(partial_timeout_ms=None, buffer_bytes=True):
-    from openmsistream_spark.streaming.assembly import _AssemblyProcessor
-
-    proc = _AssemblyProcessor(partial_timeout_ms, buffer_bytes)
-    handle = _FakeTwsHandle()
-    proc.init(handle)
-    return proc, handle
-
-
-def _tws_feed(proc, rel_path, batch_rows):
-    import pandas as pd
-
-    return [
-        df
-        for df in proc.handleInputRows(
-            (rel_path,), [pd.DataFrame(batch_rows)], _FakeTimerValues()
-        )
-        if len(df)
-    ]
-
-
-def test_tws_processor_reassembly_dedup_tombstone(spark):
-    """The TWS fold must mirror _assemble_group: out-of-order chunks
-    across batches, at-least-once dedup, completion tombstone that
-    swallows late duplicates."""
-    payload = os.urandom(4 * CS + 5)
-    rows = [r.asDict() for r in _chunk_rows(spark, "t.bin", payload, 1.0).collect()]
-    proc, handle = _tws_proc()
-
-    assert _tws_feed(proc, "t.bin", list(reversed(rows[:3])) + rows[:1]) == []
-    out = _tws_feed(proc, "t.bin", rows[3:])
-    assert len(out) == 1
-    assert list(out[0].status) == ["SUCCESSFULLY_RECONSTRUCTED"]
-    assert bytes(out[0].file_bytes.iloc[0]) == payload
-    assert out[0].n_chunks_received.iloc[0] == len(rows)
-    # payload state released on completion; tombstone retained
-    assert not handle.states["chunks"]._m
-    assert handle.states["gen"].get()[0] == -len(rows)
-    # a late duplicate of a completed file emits nothing, state unchanged
-    assert _tws_feed(proc, "t.bin", rows[:1]) == []
-    assert handle.states["gen"].get()[0] == -len(rows)
-
-
-def test_tws_processor_generation_adoption(spark):
-    """A new generation with strictly more chunks resets accumulated
-    state (reference: download_data_file.py:160-272)."""
-    old = os.urandom(2 * CS)
-    new = os.urandom(3 * CS)
-    old_rows = [r.asDict() for r in _chunk_rows(spark, "g.bin", old, 1.0).collect()]
-    new_rows = [r.asDict() for r in _chunk_rows(spark, "g.bin", new, 2.0).collect()]
-    proc, _ = _tws_proc()
-
-    assert _tws_feed(proc, "g.bin", old_rows[:1]) == []  # partial old gen
-    out = _tws_feed(proc, "g.bin", new_rows)  # new gen arrives complete
-    assert list(out[0].status) == ["SUCCESSFULLY_RECONSTRUCTED"]
-    assert bytes(out[0].file_bytes.iloc[0]) == new
-    # stale old-generation chunk after completion: ignored
-    assert _tws_feed(proc, "g.bin", old_rows[1:]) == []
-
-
-def test_tws_processor_corruption_same_hash_different_count(spark):
-    payload = os.urandom(3 * CS)
-    rows = [r.asDict() for r in _chunk_rows(spark, "c.bin", payload, 1.0).collect()]
-    proc, _ = _tws_proc()
-
-    assert _tws_feed(proc, "c.bin", rows[:-1]) == []
-    forged = {**rows[0], "n_total_chunks": 7, "chunk_offset_write": 999}
-    out = _tws_feed(proc, "c.bin", [forged])
-    assert list(out[0].status) == ["CORRUPTION"]
-    assert out[0].n_total_chunks.iloc[0] == 3  # retained generation
-    out = _tws_feed(proc, "c.bin", rows[-1:])
-    assert list(out[0].status) == ["SUCCESSFULLY_RECONSTRUCTED"]
-    assert bytes(out[0].file_bytes.iloc[0]) == payload
-    out = _tws_feed(proc, "c.bin", [forged])  # vs the tombstone
-    assert list(out[0].status) == ["CORRUPTION"]
-
-
-def test_tws_processor_offsets_only_and_timers(spark):
-    """buffer_bytes=False keeps only offsets (mode='disk'); timers drive
-    IN_PROGRESS heartbeats and disarm on completion."""
-    payload = os.urandom(3 * CS)
-    rows = [r.asDict() for r in _chunk_rows(spark, "d.bin", payload, 1.0).collect()]
-    proc, handle = _tws_proc(partial_timeout_ms=500, buffer_bytes=False)
-
-    assert _tws_feed(proc, "d.bin", rows[:2]) == []
-    assert handle.timers == [1_000_500]  # armed at now + timeout
-    # expiry: IN_PROGRESS snapshot, state retained, timer re-armed
-    beats = [
-        df
-        for df in proc.handleExpiredTimer(("d.bin",), _FakeTimerValues(), None)
-        if len(df)
-    ]
-    assert len(beats) == 1 and list(beats[0].status) == ["IN_PROGRESS"]
-    assert beats[0].n_chunks_received.iloc[0] == 2
-    assert beats[0].file_bytes.iloc[0] is None
-    assert handle.timers == [1_000_500]
-    # the late chunk completes by offset count only
-    out = _tws_feed(proc, "d.bin", rows[2:])
-    assert list(out[0].status) == ["COMPLETE_OFFSETS_ONLY"]
-    assert out[0].file_bytes.iloc[0] is None
-    assert handle.timers == []  # disarmed — tombstones never stall
-    # expiry against the tombstone reports nothing
-    assert [
-        df
-        for df in proc.handleExpiredTimer(("d.bin",), _FakeTimerValues(), None)
-        if len(df)
-    ] == []
-
-
-def test_tws_live_query_requires_protobuf(spark, tmpdirs):
-    """End-to-end transformWithStateInPandas streaming query. pyspark's
-    TWS state client needs protobuf, which this image may not ship —
-    skip (the fold logic itself is covered by the fake-handle tests
-    above, and engine='auto' falls back to applyInPandasWithState)."""
-    from openmsistream_spark.streaming.assembly import tws_available
-
-    if not tws_available():
-        pytest.skip("protobuf not installed: transformWithStateInPandas cannot run")
-    payload = os.urandom(5 * CS + 7)
-    chunks = _chunk_rows(spark, "a.bin", payload, 1.0).collect()
-    cols = chunks[0].asDict().keys()
-    spark.createDataFrame(chunks).select(*cols).write.parquet(f"{tmpdirs}/in/batch=0")
-    schema = (
-        "rel_path string, file_mtime double, n_total_chunks bigint, "
-        "file_hash binary, chunk_i bigint, chunk_offset_write bigint, data binary"
-    )
-    src = spark.readStream.schema(schema).parquet(f"{tmpdirs}/in/batch=*")
-    q = (
-        streaming_assemble(src, engine="tws")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("tws_e2e")
-        .option("checkpointLocation", f"{tmpdirs}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.sql("SELECT * FROM tws_e2e").collect()
-    assert len(out) == 1 and out[0].status == "SUCCESSFULLY_RECONSTRUCTED"
-    assert bytes(out[0].file_bytes) == payload

@@ -23,21 +23,10 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from openmsistream_spark.queries import QUERIES  # noqa: E402
+from openmsistream_spark.catalog import load_all  # noqa: E402
 from openmsistream_spark.session import get_spark  # noqa: E402
 
-import openmsistream_spark.queries_extras  # noqa: E402,F401
-import openmsistream_spark.queries_extras2  # noqa: E402,F401
-import openmsistream_spark.queries_extras3  # noqa: E402,F401
-import openmsistream_spark.queries_extras4  # noqa: E402,F401
-import openmsistream_spark.queries_extras5  # noqa: E402,F401
-import openmsistream_spark.queries_extras6  # noqa: E402,F401
-import openmsistream_spark.queries_extras7  # noqa: E402,F401
-import openmsistream_spark.queries_extras8  # noqa: E402,F401
-import openmsistream_spark.queries_extras9  # noqa: E402,F401
-import openmsistream_spark.queries_extras10  # noqa: E402,F401
-import openmsistream_spark.queries_extras11  # noqa: E402,F401
-import openmsistream_spark.queries_extras12  # noqa: E402,F401
+QUERIES = load_all()
 
 
 def main() -> None:

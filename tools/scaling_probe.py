@@ -115,21 +115,10 @@ def gen(args) -> None:
 
 
 def run(args) -> None:
-    from openmsistream_spark.queries import QUERIES
+    from openmsistream_spark.catalog import load_all
     from openmsistream_spark.session import get_spark
 
-    import openmsistream_spark.queries_extras  # noqa: F401
-    import openmsistream_spark.queries_extras2  # noqa: F401
-    import openmsistream_spark.queries_extras3  # noqa: F401
-    import openmsistream_spark.queries_extras4  # noqa: F401
-    import openmsistream_spark.queries_extras5  # noqa: F401
-    import openmsistream_spark.queries_extras6  # noqa: F401
-    import openmsistream_spark.queries_extras7  # noqa: F401
-    import openmsistream_spark.queries_extras8  # noqa: F401
-    import openmsistream_spark.queries_extras9  # noqa: F401
-    import openmsistream_spark.queries_extras10  # noqa: F401
-    import openmsistream_spark.queries_extras11  # noqa: F401
-    import openmsistream_spark.queries_extras12  # noqa: F401
+    QUERIES = load_all()
 
     import bench  # EXTRA entries (the incremental/2batch pipelines)
 
