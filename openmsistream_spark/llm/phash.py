@@ -453,18 +453,39 @@ def incremental_fingerprint_neardup(
     incremental_exact_dedup's "admits nothing on replay" (which holds
     exactly there because exact equality is transitive).
 
-    ``sidecar=True`` maintains a bloom sidecar plus a write-time combo
-    index next to the ledger
-    (``<path>.probeidx`` — see ``phash_index``), making the common
-    per-batch probe O(batch) instead of O(ledger): the ledger is never
-    re-exploded at probe time; bloom-negative keys skip the index
-    entirely and bloom-positive keys are verified EXACTLY against the
-    write-time index (membership is never decided by the bloom alone).
-    A lost/stale/pre-existing-ledger sidecar triggers one exact
-    O(ledger) repair, then probes are gated again. Semantics —
-    admitted sets, replay identity, the churn refusal — are identical
-    to ``sidecar=False`` (the original exact probe, kept as the
-    fallback path). ``sidecar_opts`` forwards sizing/policy knobs to
+    One body serves both probe paths; ``sidecar`` picks only how the
+    blocked ids are found (step 3) and how the batch commits (step 6).
+    Per micro-batch:
+
+    1. replay short-circuit: ledger rows tagged ``run_id`` ARE the
+       committed decision and are returned verbatim;
+    2. gated path only — coverage check: sidecar row count vs ledger
+       row count (a footer-only count); a mismatch (crash window, lost
+       sidecar, pre-sidecar ledger, out-of-band append) triggers an
+       exact repair of exactly the uncovered rows;
+    3. blocked ids: the exact path equi-joins the batch's combo keys
+       against the whole ledger's combo explode (O(ledger)); the gated
+       path marks them against the sidecar's broadcast bloom, skips
+       negatives and verifies positives exactly against the write-time
+       combo index (pushed IN filter on sorted segments) — O(batch),
+       and the bloom alone never blocks or admits anything;
+    4. within-batch keep-first sweep;
+    5. media_id collision guard — on the gated path behind the id
+       bloom, so a no-overlap batch pays one row-local mark pass and
+       no ledger join;
+    6. commit: the exact path always upserts, so even an empty first
+       batch creates the ledger; the gated path upserts a non-empty
+       admit only, then the sidecar records the batch (index append +
+       mask OR + meta swap). The upsert is the commit point: a crash
+       before the sidecar record is healed by step 2 next call;
+    7. the result is re-derived from the committed ledger.
+
+    ``sidecar=True`` keeps the sidecar and its combo index next to the
+    ledger (``<path>.probeidx`` — see ``phash_index``); a lost, stale
+    or pre-existing-ledger sidecar costs one exact O(ledger) repair,
+    then probes are gated again. ``sidecar=False`` is the exact probe.
+    Both paths admit identical sets, replay identically and refuse the
+    same churn. ``sidecar_opts`` forwards sizing/policy knobs to
     ``FingerprintProbeSidecar`` (``combo_m_bits``, ``k``,
     ``max_pushdown_keys``, ``resize="auto"|"manual"``, ``max_m_bits``,
     …): pre-size ``combo_m_bits`` for the expected ledger scale and/or
@@ -485,135 +506,161 @@ def incremental_fingerprint_neardup(
     """
     import uuid
 
+    from pyspark import StorageLevel
+
     run_id = run_id if run_id is not None else uuid.uuid4().hex
     batch = fps.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
+    spark = batch.sparkSession
     if sidecar == "auto":
         from ..operators.registry import HadoopFS
 
-        fs = HadoopFS(batch.sparkSession, registry.path)
+        fs = HadoopFS(spark, registry.path)
         base = registry.path.rstrip("/") + ".probeidx"
         sidecar = fs.exists(f"{base}/meta") or (
             registry.exists()
             and fs.size_bytes(registry.path) >= SIDECAR_AUTO_MIN_BYTES
         )
-    if sidecar:
-        return _incremental_neardup_gated(
-            batch, registry, bits, blocks, max_hamming, run_id, sidecar_opts or {}
-        )
 
-    from pyspark import StorageLevel
+    def committed() -> DataFrame:
+        # the ledger's run_id rows are the result (durable; replay-identical)
+        out = registry.read()
+        if out is None:  # first-ever gated batch admitted nothing
+            return batch.select(
+                F.col("_id").alias("media_id"), F.col("_fp").alias("fingerprint")
+            ).limit(0)
+        return out.filter(F.col("run_id") == run_id).select("media_id", "fingerprint")
 
+    pins: list[DataFrame] = []  # every frame persisted here; released on exit
+
+    def pin(df: DataFrame) -> DataFrame:
+        pins.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return pins[-1]
+
+    sc = None
     seen = registry.read()
-    if seen is not None:
-        # a compact ledger reads as FEW partitions (a one-file delta
-        # segment is one), which would serialize the 56x combo explode
-        # of the probe onto one core — measured 20.7 s single-partition
-        # vs 5.3 s at session parallelism on a 190k-row ledger. The
-        # repartition shuffle moves only 24-byte rows, orders of
-        # magnitude cheaper than the serial explode it prevents.
-        par = seen.sparkSession.sparkContext.defaultParallelism
-        if seen.rdd.getNumPartitions() < par:
-            seen = seen.repartition(par)
-        # the ledger frame feeds THREE actions per batch (short-circuit
-        # check, combo probe, collision-guard probe) — persist so the
-        # backend's read plan (a multi-segment union/fold on the log
-        # backend, a scan on parquet) executes once, not three times;
-        # ledger rows are 24 bytes each, so this spills gracefully
-        seen = seen.persist(StorageLevel.MEMORY_AND_DISK)
-        # same-run_id short-circuit: committed decisions are the result
-        mine = seen.filter(F.col("run_id") == run_id)
-        if mine.limit(1).count() > 0:
-            seen.unpersist()
-            return (
-                registry.read()
-                .filter(F.col("run_id") == run_id)
-                .select("media_id", "fingerprint")
-            )
-
-    # the batch fingerprints feed the probe, the self-join (both sides)
-    # and the admitted anti-join — without a persist the upstream Arrow
-    # decode+hash stage would re-execute in each branch
-    pinned = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    batch = pinned
-    # pin the batch's 56× combo explode too: the ledger probe and BOTH
-    # sides of the within-batch sweep consume it — re-deriving it from
-    # the post-anti-join survivors (the previous shape) re-ran the
-    # explode + key packing once per consumer (guide §1.2 per-task
-    # work; an anti-join of the already-exploded rows on _id yields
-    # the identical rowset, explode is per-row deterministic)
-    keyed_full = _combo_keyed(batch, bits, blocks, max_hamming).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keyed = keyed_full
-
-    # vs-ledger probe: any prior fingerprint within budget blocks the id
-    if seen is not None:
-        seen_keyed = _combo_keyed(
-            seen.select(
-                F.col("media_id").alias("_id"), F.col("fingerprint").alias("_fp")
-            ),
-            bits,
-            blocks,
-            max_hamming,
-        ).select(
-            "combo", "combo_key", F.col("_fp").alias("_ledger_fp")
-        )
-        # merge hint on the LEDGER explode: its true size is unbounded
-        # (56× ledger rows) but Catalyst's Generate stats under-estimate
-        # it, so size-based planning can pick it as a broadcast side —
-        # reproduced at a 1.3M-row ledger (8.9 GiB built relation vs
-        # the 8 GiB cap) once the batch explode gained accurate cached
-        # stats. Guide §3.1: never broadcast the side that grows without
-        # bound; the shuffle this forces moves 40-byte key rows.
-        blocked = (
-            keyed_full.join(seen_keyed.hint("merge"), ["combo", "combo_key"])
-            .filter(F.expr("bit_count(_fp ^ _ledger_fp)") <= max_hamming)
-            .select("_id")
-            .distinct()
-        )
-        batch = batch.join(blocked, "_id", "left_anti")
-        keyed = keyed_full.join(blocked, "_id", "left_anti")
-
-    # within-batch keep-first: drop ids matching a smaller surviving id
-    a = keyed.select(
-        F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"), "combo", "combo_key"
-    )
-    b = keyed.select(
-        F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"), "combo", "combo_key"
-    )
-    dup_ids = (
-        a.join(b, ["combo", "combo_key"])
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.expr("bit_count(fp_a ^ fp_b)") <= max_hamming)
-        )
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    admitted = batch.join(dup_ids, "_id", "left_anti")
-    # the collision guard below and the upsert both consume `admitted`
-    # (two actions): persist so the probe + within-batch sweep joins
-    # execute once — the pinned decode output alone doesn't cover the
-    # join work
-    admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
-
     try:
         if seen is not None:
-            # media_id collision guard: the upsert is keyed on media_id,
-            # so re-ingesting an already-ledgered media_id with DIFFERENT
-            # content would silently re-tag that row's run_id — an
-            # earlier run's "returned verbatim" replay would then yield
-            # fewer rows than it committed, breaking exactly-once.
-            # (Unchanged content never reaches here: its fingerprint is
-            # hamming-0 from its own ledger row, so the probe blocks it;
-            # and same-run_id rows short-circuited above.) Two tiers so
-            # the common case stays cheap: a key-only equi-join first
-            # (pinned batch vs 16-byte ledger rows — no combo explode,
-            # no sweep); only a batch that actually shares media_ids
-            # with the ledger pays the precise admitted-side check.
-            # gate on the PINNED pre-probe batch: evaluating the
-            # post-anti-join `batch` would run the combo probe chain,
-            # which is exactly the cost the gate exists to avoid
+            if not sidecar:
+                # a compact ledger reads as FEW partitions (a one-file
+                # delta segment is one), which would serialize the 56x
+                # combo explode of the probe onto one core — measured
+                # 20.7 s single-partition vs 5.3 s at session
+                # parallelism on a 190k-row ledger. The repartition
+                # shuffle moves only 24-byte rows, orders of magnitude
+                # cheaper than the serial explode it prevents.
+                par = spark.sparkContext.defaultParallelism
+                if seen.rdd.getNumPartitions() < par:
+                    seen = seen.repartition(par)
+                # the exact path's ledger frame feeds THREE actions per
+                # batch (short-circuit check, combo probe, collision-
+                # guard probe) — persist so the backend's read plan (a
+                # multi-segment union/fold on the log backend, a scan on
+                # parquet) executes once, not three times; ledger rows
+                # are 24 bytes each, so this spills gracefully. The
+                # gated path never persists the ledger: it touches it
+                # only through the pushed run_id scan below, a
+                # footer-only count and the guard's semi-join.
+                seen = pin(seen)
+            # same-run_id short-circuit: committed decisions are the result
+            if seen.filter(F.col("run_id") == run_id).limit(1).count() > 0:
+                return committed()
+        if sidecar:
+            from .phash_index import FingerprintProbeSidecar
+
+            sc = FingerprintProbeSidecar(
+                spark, registry.path, bits, blocks, max_hamming, **(sidecar_opts or {})
+            )
+            sc.load_or_init()
+            ledger_count = seen.count() if seen is not None else 0
+            if sc.n_items != ledger_count:
+                sc.repair(seen, ledger_count)
+            if not ledger_count:
+                seen = None  # nothing committed to probe or guard against
+
+        # the batch fingerprints feed the probe, the self-join (both
+        # sides) and the admitted anti-join — without a persist the
+        # upstream Arrow decode+hash stage would re-execute in each
+        # branch
+        pinned = pin(batch)
+        # pin the batch's 56× combo explode too: the ledger probe, BOTH
+        # sides of the within-batch sweep and the sidecar's index append
+        # consume it — re-deriving it from the post-anti-join survivors
+        # re-ran the explode + key packing once per consumer (guide §1.2
+        # per-task work; an anti-join of the already-exploded rows on
+        # _id yields the identical rowset, explode is per-row
+        # deterministic)
+        keyed_full = pin(_combo_keyed(pinned, bits, blocks, max_hamming))
+        keyed, surv = keyed_full, pinned
+
+        # vs-ledger probe: any prior fingerprint within budget blocks the id
+        if seen is not None:
+            if sc is not None:
+                blocked = sc.blocked_ids(keyed_full)
+            else:
+                seen_keyed = _combo_keyed(
+                    seen.select(
+                        F.col("media_id").alias("_id"),
+                        F.col("fingerprint").alias("_fp"),
+                    ),
+                    bits,
+                    blocks,
+                    max_hamming,
+                ).select("combo", "combo_key", F.col("_fp").alias("_ledger_fp"))
+                # merge hint on the LEDGER explode: its true size is
+                # unbounded (56× ledger rows) but Catalyst's Generate
+                # stats under-estimate it, so size-based planning can
+                # pick it as a broadcast side — reproduced at a
+                # 1.3M-row ledger (8.9 GiB built relation vs the 8 GiB
+                # cap) once the batch explode gained accurate cached
+                # stats. Guide §3.1: never broadcast the side that grows
+                # without bound; the shuffle this forces moves 40-byte
+                # key rows.
+                blocked = (
+                    keyed_full.join(seen_keyed.hint("merge"), ["combo", "combo_key"])
+                    .filter(F.expr("bit_count(_fp ^ _ledger_fp)") <= max_hamming)
+                    .select("_id")
+                    .distinct()
+                )
+            surv = pinned.join(blocked, "_id", "left_anti")
+            keyed = keyed_full.join(blocked, "_id", "left_anti")
+
+        # within-batch keep-first: drop ids matching a smaller surviving id
+        a = keyed.select(
+            F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"), "combo", "combo_key"
+        )
+        b = keyed.select(
+            F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"), "combo", "combo_key"
+        )
+        dup_ids = (
+            a.join(b, ["combo", "combo_key"])
+            .filter(
+                (F.col("id_a") < F.col("id_b"))
+                & (F.expr("bit_count(fp_a ^ fp_b)") <= max_hamming)
+            )
+            .select(F.col("id_b").alias("_id"))
+            .distinct()
+        )
+        # the collision guard and the commit both consume `admitted`
+        # (two actions): persist so the probe + within-batch sweep joins
+        # execute once — the pinned decode output alone doesn't cover
+        # the join work
+        admitted = pin(surv.join(dup_ids, "_id", "left_anti"))
+
+        # media_id collision guard: the upsert is keyed on media_id, so
+        # re-ingesting an already-ledgered media_id with DIFFERENT
+        # content would silently re-tag that row's run_id — an earlier
+        # run's "returned verbatim" replay would then yield fewer rows
+        # than it committed, breaking exactly-once. (Unchanged content
+        # never reaches here: its fingerprint is hamming-0 from its own
+        # ledger row, so the probe blocks it; and same-run_id rows
+        # short-circuited above.) Tiers keep the common case cheap: the
+        # gated path first asks the id bloom (no false negatives for
+        # covered rows); then a key-only equi-join of the PINNED
+        # pre-probe batch vs 16-byte ledger rows (evaluating the
+        # post-anti-join frame would run the combo probe chain, the cost
+        # the gate exists to avoid); only a batch that actually shares
+        # media_ids with the ledger pays the precise admitted-side check.
+        if seen is not None and (sc is None or sc.any_id_maybe_seen(pinned)):
             seen_ids = seen.select(F.col("media_id").alias("_id"))
             if pinned.join(seen_ids, "_id", "left_semi").limit(1).count() > 0:
                 hit = admitted.join(seen_ids, "_id", "left_semi").limit(1).collect()
@@ -627,170 +674,41 @@ def incremental_fingerprint_neardup(
                         "ingest changed content under a NEW media_id "
                         "(or rebuild the ledger)"
                     )
-        registry.upsert(
-            admitted.select(
-                F.col("_id").alias("media_id"),
-                F.col("_fp").alias("fingerprint"),
-                F.lit(run_id).alias("run_id"),
-            )
+
+        rows = admitted.select(
+            F.col("_id").alias("media_id"),
+            F.col("_fp").alias("fingerprint"),
+            F.lit(run_id).alias("run_id"),
         )
-    finally:
-        pinned.unpersist()
-        keyed_full.unpersist()
-        admitted.unpersist()
-        if seen is not None:
-            seen.unpersist()
-    # re-derive from the committed ledger (durable; replay-identical)
-    return (
-        registry.read()
-        .filter(F.col("run_id") == run_id)
-        .select("media_id", "fingerprint")
-    )
-
-
-def _incremental_neardup_gated(
-    batch: DataFrame,
-    registry,
-    bits: int,
-    blocks: int,
-    max_hamming: int,
-    run_id: str,
-    opts: dict,
-) -> DataFrame:
-    """The sidecar-gated probe path of
-    ``incremental_fingerprint_neardup`` — same admitted sets, O(batch)
-    common cost. Per micro-batch:
-
-    1. replay short-circuit: ledger rows tagged ``run_id`` ARE the
-       committed decision (a pushed run_id-column scan — the only
-       whole-ledger touch on the common path, and it reads one column);
-    2. coverage check: sidecar row count vs ledger row count (a
-       footer-only count); mismatch (crash window, lost sidecar,
-       pre-sidecar ledger, out-of-band append) triggers an exact
-       repair of exactly the uncovered rows;
-    3. gated probe: batch combo keys marked against the broadcast
-       bloom; negatives skip; positives verified exactly against the
-       write-time combo index (pushed IN filter on sorted segments);
-    4. within-batch keep-first sweep (unchanged from the exact path);
-    5. collision guard, gated by the media_id bloom (a no-overlap
-       batch pays one row-local mark pass, no ledger join);
-    6. commit: ledger upsert FIRST (the commit point), then the
-       sidecar records the batch (index append + mask OR + meta swap).
-       A crash between 6a and 6b is healed by step 2 next call.
-    """
-    from pyspark import StorageLevel
-
-    from .phash_index import FingerprintProbeSidecar
-
-    spark = batch.sparkSession
-    ledger = registry.read()
-    if ledger is not None:
-        if ledger.filter(F.col("run_id") == run_id).limit(1).count() > 0:
-            return (
-                registry.read()
-                .filter(F.col("run_id") == run_id)
-                .select("media_id", "fingerprint")
-            )
-    sc_state = FingerprintProbeSidecar(
-        spark, registry.path, bits, blocks, max_hamming, **opts
-    )
-    sc_state.load_or_init()
-    ledger_count = ledger.count() if ledger is not None else 0
-    if sc_state.n_items != ledger_count:
-        sc_state.repair(ledger, ledger_count)
-
-    pinned = batch.persist(StorageLevel.MEMORY_AND_DISK)
-    # pin the batch's 56× combo explode: the gated probe's mark pass,
-    # BOTH sides of the within-batch sweep, and the sidecar's index
-    # append all consume the same rows — the previous shape re-ran the
-    # explode + key packing from the survivors once per consumer
-    # (guide §1.2; the anti-joins below on _id yield rowsets identical
-    # to re-exploding the surviving rows)
-    keyed_full = _combo_keyed(pinned, bits, blocks, max_hamming).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keyed = keyed_full
-    surv = pinned
-    if ledger_count:
-        blocked = sc_state.blocked_ids(keyed_full)
-        surv = pinned.join(blocked, "_id", "left_anti")
-        keyed = keyed_full.join(blocked, "_id", "left_anti")
-
-    # within-batch keep-first: drop ids matching a smaller surviving id
-    a = keyed.select(
-        F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"), "combo", "combo_key"
-    )
-    b = keyed.select(
-        F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"), "combo", "combo_key"
-    )
-    dup_ids = (
-        a.join(b, ["combo", "combo_key"])
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.expr("bit_count(fp_a ^ fp_b)") <= max_hamming)
-        )
-        .select(F.col("id_b").alias("_id"))
-        .distinct()
-    )
-    admitted = surv.join(dup_ids, "_id", "left_anti")
-    admitted = admitted.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        # media_id collision guard (same contract as the exact path) —
-        # gated by the id bloom: no false negatives for covered rows,
-        # so a bloom-all-negative batch cannot contain a ledgered id
-        if ledger_count and sc_state.any_id_maybe_seen(pinned):
-            seen_ids = ledger.select(F.col("media_id").alias("_id"))
-            if pinned.join(seen_ids, "_id", "left_semi").limit(1).count() > 0:
-                hit = admitted.join(seen_ids, "_id", "left_semi").limit(1).collect()
-                if hit:
-                    raise ValueError(
-                        "incremental_fingerprint_neardup: media_id "
-                        f"{hit[0]._id} is already in the ledger from a "
-                        "prior run with a different fingerprint; "
-                        "upserting would re-tag that row's run_id and "
-                        "break the prior run's exactly-once replay — "
-                        "ingest changed content under a NEW media_id "
-                        "(or rebuild the ledger)"
-                    )
-        n_admitted = admitted.count()
-        if n_admitted:
-            registry.upsert(
-                admitted.select(
+        if sc is None:
+            registry.upsert(rows)
+        else:
+            n_admitted = admitted.count()
+            if n_admitted:
+                registry.upsert(rows)
+            # ledger committed — cover it in the sidecar (crash here =
+            # count mismatch = exact repair next call). An empty admit
+            # writes neither: replaying it recomputes from the same
+            # ledger state and re-derives the same empty set; record()
+            # still runs to release the probe's pins. The admitted
+            # rows' combo explode is derived from the pinned keyed_full
+            # (sweep survivors minus within-batch dups) so record() does
+            # not re-explode + re-hash the admitted rows from scratch.
+            sc.record(
+                rows.drop("run_id"),
+                run_id,
+                n_admitted,
+                exploded=keyed.join(dup_ids, "_id", "left_anti").select(
+                    "combo",
+                    "combo_key",
                     F.col("_id").alias("media_id"),
                     F.col("_fp").alias("fingerprint"),
-                    F.lit(run_id).alias("run_id"),
-                )
+                ),
             )
-        # ledger committed — cover it in the sidecar (crash here =
-        # count mismatch = exact repair next call). An empty admit
-        # skips both writes: replaying it recomputes from the same
-        # ledger state and re-derives the same empty set. The admitted
-        # rows' combo explode is derived from the pinned keyed_full
-        # (sweep survivors minus within-batch dups) so record() does
-        # not re-explode + re-hash the admitted rows from scratch.
-        sc_state.record(
-            admitted.select(
-                F.col("_id").alias("media_id"), F.col("_fp").alias("fingerprint")
-            ),
-            run_id,
-            n_admitted,
-            exploded=keyed.join(dup_ids, "_id", "left_anti").select(
-                "combo",
-                "combo_key",
-                F.col("_id").alias("media_id"),
-                F.col("_fp").alias("fingerprint"),
-            ),
-        )
     finally:
-        pinned.unpersist()
-        keyed_full.unpersist()
-        admitted.unpersist()
-    out = registry.read()
-    if out is None:  # first-ever batch admitted nothing
-        return batch.select(
-            F.col("_id").alias("media_id"), F.col("_fp").alias("fingerprint")
-        ).limit(0)
-    return out.filter(F.col("run_id") == run_id).select("media_id", "fingerprint")
+        for df in pins:
+            df.unpersist()
+    return committed()
 
 
 def image_neardup_pairs(

@@ -921,9 +921,9 @@ class FingerprintProbeSidecar:
 
         ``exploded``, when given, must equal ``_explode(admitted)``
         (the caller already holds the batch's 56× combo explode pinned
-        — ``_incremental_neardup_gated`` derives the admitted subset
-        from it by two anti-joins instead of re-exploding + re-hashing
-        the admitted rows from scratch)."""
+        — ``phash.incremental_fingerprint_neardup``'s gated path
+        derives the admitted subset from it by two anti-joins instead
+        of re-exploding + re-hashing the admitted rows from scratch)."""
         from pyspark import StorageLevel
 
         try:

@@ -42,24 +42,17 @@ FILE_KEY = ["rel_path"]
 
 
 @pandas_udf(T.BinaryType())
-def _join_byte_parts(parts: pd.Series) -> pd.Series:
-    """Linear-time binary flatten (b"".join). The declarative alternative
-    — F.aggregate over concat — re-copies the accumulated prefix per
-    element: ~n²/2 byte copies for an n-chunk file (the reference instead
-    writes offset-addressed, download_data_file.py:355-372). Arrow-batched;
-    null in (incomplete/corrupt file) → null out."""
-    return parts.map(
-        lambda ps: None if ps is None else b"".join(bytes(p) for p in ps)
-    )
-
-
-@pandas_udf(T.BinaryType())
 def _join_byte_parts_dedup(parts: pd.Series) -> pd.Series:
     """Linear-time flatten over sorted (offset o, generation hash h,
     data d) structs, skipping duplicate (o, h) deliveries in-stream — the
     F4 offset-dedup fused into the concat so assembly needs no separate
     dropDuplicates shuffle. Payloads at the same (generation, offset) are
-    identical by construction (chunk_hash re-verified upstream)."""
+    identical by construction (chunk_hash re-verified upstream). The
+    declarative alternative — F.aggregate over concat — re-copies the
+    accumulated prefix per element: ~n²/2 byte copies for an n-chunk
+    file (the reference instead writes offset-addressed,
+    download_data_file.py:355-372). Arrow-batched; null in
+    (incomplete/corrupt file) → null out."""
 
     def one(ps):
         if ps is None:
@@ -150,9 +143,7 @@ def assemble_files(
     chunks: DataFrame,
     key: list[str] | None = None,
     apply_generation_policy: bool = True,
-    emit_incomplete: bool = True,
     generation_strategy: str = "join",
-    detect_corruption: bool = True,
 ) -> DataFrame:
     """A1+A3 — reassemble files from chunk rows.
 
@@ -160,9 +151,9 @@ def assemble_files(
     n_chunks_received, file_bytes (null unless complete), status code in
     {IN_PROGRESS, SUCCESSFULLY_RECONSTRUCTED, HASH_MISMATCH, CORRUPTION}.
 
-    ``detect_corruption`` — the reference raises when one file_hash
-    appears with two different n_total_chunks (download_data_file.py:
-    160-272); here those files get status CORRUPTION and null bytes.
+    Corruption — the reference raises when one file_hash appears with
+    two different n_total_chunks (download_data_file.py:160-272); here
+    those files get status CORRUPTION and null bytes.
 
     ``generation_strategy`` picks how the per-file metadata (corrupt
     flag + winning generation) is computed:
@@ -178,10 +169,6 @@ def assemble_files(
     concat) — no separate dropDuplicates shuffle.
     """
     key = key or FILE_KEY
-    corrupt_agg = (
-        F.size(F.collect_set(F.struct("file_hash", "n_total_chunks")))
-        > F.size(F.collect_set("file_hash"))
-    ).alias("_corrupt")
     gen = F.struct(
         F.col("n_total_chunks"),
         F.coalesce(F.col("file_mtime"), F.lit(0.0)).alias("file_mtime"),
@@ -199,12 +186,8 @@ def assemble_files(
         df = df.withColumn(
             "_corrupt",
             # corrupt ⇔ more distinct (hash, count) pairs than distinct hashes
-            (
-                F.size(F.collect_set(F.struct("file_hash", "n_total_chunks")).over(w))
-                > F.size(F.collect_set("file_hash").over(w))
-            )
-            if detect_corruption
-            else F.lit(False),
+            F.size(F.collect_set(F.struct("file_hash", "n_total_chunks")).over(w))
+            > F.size(F.collect_set("file_hash").over(w)),
         )
         if apply_generation_policy:
             # match on generation identity (n, hash) only — mtime orders
@@ -225,15 +208,16 @@ def assemble_files(
         # enter this branch) computes the corrupt flag AND the winning
         # generation, joined back on the file key; the payload then
         # shuffles exactly once, in the assembly groupBy below
-        meta_aggs = [F.max(gen).alias("_win")]
-        if detect_corruption:  # skip the collect_set state when unwanted
-            meta_aggs.append(corrupt_agg)
-        meta = chunks.groupBy(*key).agg(*meta_aggs)
+        meta = chunks.groupBy(*key).agg(
+            F.max(gen).alias("_win"),
+            (
+                F.size(F.collect_set(F.struct("file_hash", "n_total_chunks")))
+                > F.size(F.collect_set("file_hash"))
+            ).alias("_corrupt"),
+        )
         sel = meta.select(
             *key,
-            (F.col("_corrupt") if detect_corruption else F.lit(False)).alias(
-                "_corrupt"
-            ),
+            "_corrupt",
             F.col("_win.n_total_chunks").alias("_win_n"),
             F.col("_win.gen_tiebreak").alias("_win_tb"),
         )
@@ -245,7 +229,7 @@ def assemble_files(
             )
         df = df.drop("_win_n", "_win_tb")
 
-    assembled = (
+    return (
         df.groupBy(*key)
         .agg(
             F.first("_corrupt").alias("_corrupt"),  # constant per group
@@ -309,6 +293,3 @@ def assemble_files(
         )
         .drop("_parts", "_corrupt")
     )
-    if not emit_incomplete:
-        assembled = assembled.filter(F.col("status") != CODE_IN_PROGRESS)
-    return assembled

@@ -372,39 +372,47 @@ class LogStructuredRegistry(ParquetRegistry):
             # steady state after compaction: a plain keyed parquet scan,
             # exactly what the parquet backend's read costs
             return self.spark.read.parquet(segs[0][2])
+        return self._table(segs)
+
+    def _table(self, segs: list[tuple[int, str, str]]) -> DataFrame:
+        """The live table over ``segs``: declared key-disjoint with no
+        tombstones, the plain union of segment scans IS the table (no
+        seq column, no aggregate, no shuffle); otherwise the exact
+        fold. A trun carries embedded tombstone rows, so its presence
+        (like a tomb's) flips to the fold."""
         if self.insert_only and all(k not in ("tomb", "trun") for _, k, _ in segs):
-            # declared key-disjoint: the union IS the table (no fold);
-            # a trun carries embedded tombstone rows, so its presence
-            # (like a tomb's) flips reads back to the exact fold
-            dfs = [self.spark.read.parquet(p) for _, _, p in segs]
-            out = dfs[0]
-            for df in dfs[1:]:
-                out = out.unionByName(df, allowMissingColumns=True)
-            return out
+            return _union([self.spark.read.parquet(p) for _, _, p in segs])
         return self._fold(segs)
 
-    def _fold(self, segs: list[tuple[int, str, str]]) -> DataFrame:
-        """Latest-sequence-wins fold of the given segments; tombstoned
-        keys drop. One map-side-combinable ``max_by`` aggregate over
-        the union — no window, no sort."""
+    def _fold(
+        self, segs: list[tuple[int, str, str]], keep_tombs: bool = False
+    ) -> DataFrame:
+        """Latest-sequence-wins fold of the given segments. One
+        map-side-combinable ``max_by`` aggregate over the union — no
+        window, no sort. Tombstoned keys drop, unless ``keep_tombs``
+        (a minor fold above a base): then tombstone winners stay as
+        rows so the base below still sees the deletions at read time."""
+        add_tomb = not keep_tombs or any(k in ("tomb", "trun") for _, k, _ in segs)
         dfs = []
-        for seq, kind, p in segs:
+        for seq, _, p in segs:
             df = self.spark.read.parquet(p).withColumn(
                 self._SEQ_COL, F.lit(seq).cast("long")
             )
-            if self._TOMB_COL not in df.columns:
+            if add_tomb and self._TOMB_COL not in df.columns:
                 df = df.withColumn(self._TOMB_COL, F.lit(False))
             dfs.append(df)
-        all_rows = dfs[0]
-        for df in dfs[1:]:
-            all_rows = all_rows.unionByName(df, allowMissingColumns=True)
+        all_rows = _union(dfs)
         val_cols = [c for c in all_rows.columns if c not in self.key_cols]
         folded = all_rows.groupBy(*self.key_cols).agg(
             F.max_by(F.struct(*val_cols), F.col(self._SEQ_COL)).alias("_oms_v")
         )
-        keep = [c for c in val_cols if c not in (self._SEQ_COL, self._TOMB_COL)]
-        return folded.filter(~F.col(f"_oms_v.{self._TOMB_COL}")).select(
-            *self.key_cols, *[F.col(f"_oms_v.{c}").alias(c) for c in keep]
+        drop = (self._SEQ_COL,)
+        if not keep_tombs:
+            drop += (self._TOMB_COL,)
+            folded = folded.filter(~F.col(f"_oms_v.{self._TOMB_COL}"))
+        return folded.select(
+            *self.key_cols,
+            *[F.col(f"_oms_v.{c}").alias(c) for c in val_cols if c not in drop],
         )
 
     def _next_seq(self, segs: list[tuple[int, str, str]]) -> int:
@@ -448,28 +456,12 @@ class LogStructuredRegistry(ParquetRegistry):
         segment, preserving tombstone winners as embedded rows so the
         base below still sees deletions at read time. Pause is
         O(bytes folded) — independent of base size."""
-        dfs = []
         has_tombs = any(k in ("tomb", "trun") for _, k, _ in segs)
-        for seq, kind, p in segs:
-            df = self.spark.read.parquet(p).withColumn(
-                self._SEQ_COL, F.lit(seq).cast("long")
-            )
-            if has_tombs and self._TOMB_COL not in df.columns:
-                df = df.withColumn(self._TOMB_COL, F.lit(False))
-            dfs.append(df)
-        all_rows = dfs[0]
-        for df in dfs[1:]:
-            all_rows = all_rows.unionByName(df, allowMissingColumns=True)
-        val_cols = [c for c in all_rows.columns if c not in self.key_cols]
-        folded = all_rows.groupBy(*self.key_cols).agg(
-            F.max_by(F.struct(*val_cols), F.col(self._SEQ_COL)).alias("_oms_v")
+        self._write_segment(
+            self._fold(segs, keep_tombs=True),
+            "trun" if has_tombs else "run",
+            self._next_seq(self._list_segments()),
         )
-        keep = [c for c in val_cols if c != self._SEQ_COL]
-        folded = folded.select(
-            *self.key_cols, *[F.col(f"_oms_v.{c}").alias(c) for c in keep]
-        )
-        kind = "trun" if has_tombs else "run"
-        self._write_segment(folded, kind, self._next_seq(self._list_segments()))
         for _, _, p in segs:
             self.fs.delete(p)
 
@@ -510,18 +502,9 @@ class LogStructuredRegistry(ParquetRegistry):
         all_segs = self._list_segments()
         segs = self._segments()
         if segs and not (len(segs) == 1 and segs[0][1] == "base"):
-            if self.insert_only and all(
-                k not in ("tomb", "trun") for _, k, _ in segs
-            ):
-                # declared key-disjoint, nothing tombstoned: the union
-                # IS the table — rewrite it without the fold's shuffle
-                dfs = [self.spark.read.parquet(p) for _, _, p in segs]
-                folded = dfs[0]
-                for df in dfs[1:]:
-                    folded = folded.unionByName(df, allowMissingColumns=True)
-            else:
-                folded = self._fold(segs)
-            self._write_segment(folded, "base", self._next_seq(all_segs))
+            # key-disjoint with nothing tombstoned, _table is the plain
+            # union: the rewrite skips the fold's shuffle
+            self._write_segment(self._table(segs), "base", self._next_seq(all_segs))
             for _, _, p in all_segs:
                 self.fs.delete(p)
         else:
@@ -534,6 +517,15 @@ class LogStructuredRegistry(ParquetRegistry):
         for name in self.fs.list_dirs(self.path):
             if name.startswith(".staging-"):
                 self.fs.delete(f"{self.path}/{name}")
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    """By-name union of segment frames (a segment may lack columns a
+    later one added, e.g. the tombstone flag)."""
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df, allowMissingColumns=True)
+    return out
 
 
 def _is_log_layout(fs: HadoopFS, path: str) -> bool:

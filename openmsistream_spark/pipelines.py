@@ -320,9 +320,7 @@ class StreamProcessor:
             spark, topic_uri, key_regex, filepath_regex, dlq_dir,
             kafka_opts=kafka_opts,
         )
-        completed = assemble_files(
-            good, emit_incomplete=False, generation_strategy="window"
-        ).filter(
+        completed = assemble_files(good, generation_strategy="window").filter(
             F.col("status") == CODE_SUCCESSFULLY_RECONSTRUCTED
         )
         hook = self.process_file
@@ -380,9 +378,7 @@ class StreamReproducer:
     ) -> DataFrame:
         _pickle_hook_by_value(self)
         good = _decode_and_filter(spark, source_topic_uri, key_regex, filepath_regex, None)
-        completed = assemble_files(
-            good, emit_incomplete=False, generation_strategy="window"
-        ).filter(
+        completed = assemble_files(good, generation_strategy="window").filter(
             F.col("status") == CODE_SUCCESSFULLY_RECONSTRUCTED
         )
         hook = self.compute_message

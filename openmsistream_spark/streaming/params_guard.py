@@ -11,9 +11,9 @@ VALIDATES them on every restart — a mismatch is refused by name before
 any batch runs, and a pre-sidecar ledger is refused as unverifiable
 rather than guessed at.
 
-The sidecar rides the same Hadoop-visible storage as the ledger (one
-tiny parquet write — atomic enough for a value written once and only
-ever compared).
+The sidecar rides the same Hadoop-visible storage as the ledger and is
+written through ``ParquetRegistry.replace`` (staged write, rename-aside
+swap, rollback on a failed swap).
 """
 
 from __future__ import annotations
@@ -50,46 +50,18 @@ def ensure_sidecar_params(
             f"{n} {'string' if isinstance(params[n], str) else 'long'}"
             for n in names
         )
-        # staged write + atomic rename (the ParquetRegistry._overwrite
-        # discipline): a reader racing this overwrite must see the old
-        # sidecar or the new one, never a half-written directory — the
+        # staged write + rename-aside swap with rollback: a reader
+        # racing this overwrite sees the old sidecar or the new one,
+        # never a half-written directory or none at all — the
         # "unreadable sidecar next to a live ledger" refusal is reserved
-        # for real corruption, not for losing a race
-        import uuid
+        # for real corruption, and a concurrent sink's per-batch guard
+        # must not hit the 'predates parameter tracking' refusal
+        # mid-swap while both writers agree on parameters
+        from ..operators.registry import ParquetRegistry
 
-        staging = f"{params_path}.staging-{uuid.uuid4().hex[:8]}"
-        spark.createDataFrame([want], schema).write.mode("overwrite").parquet(
-            staging
+        ParquetRegistry(spark, params_path, []).replace(
+            spark.createDataFrame([want], schema)
         )
-        # stage the old copy ASIDE and roll back on a failed swap (the
-        # full ParquetRegistry._overwrite discipline): delete-then-rename
-        # would leave NO sidecar if the rename fails or this writer dies
-        # between the two calls — and a concurrent sink's per-batch guard
-        # would then hard-fail with the 'predates parameter tracking'
-        # refusal even though both writers agree on parameters
-        old = f"{params_path}.old-{uuid.uuid4().hex[:8]}"
-        existed = registry.fs.exists(params_path)
-        if existed:
-            if not registry.fs.rename(params_path, old):
-                registry.fs.delete(staging)
-                raise IOError(
-                    f"{sink_name}: could not stage out old _params sidecar "
-                    f"at {params_path}"
-                )
-        if not registry.fs.rename(staging, params_path):
-            rolled_back = (
-                registry.fs.rename(old, params_path) if existed else True
-            )
-            registry.fs.delete(staging)
-            msg = (
-                f"{sink_name}: could not swap staged _params sidecar into "
-                f"{params_path}"
-            )
-            if not rolled_back:
-                msg += f"; ROLLBACK ALSO FAILED — previous sidecar left at {old}"
-            raise IOError(msg)
-        if existed:
-            registry.fs.delete(old)
         return
     if not registry.fs.exists(params_path):
         raise ValueError(

@@ -277,11 +277,13 @@ def test_incremental_fingerprint_neardup_across_runs(spark, tmp_path):
     assert ledger == {1, 3, 5}
 
 
-def test_incremental_chain_replay_is_exactly_once(spark, tmp_path):
+@pytest.mark.parametrize("sidecar", [False, True])
+def test_incremental_chain_replay_is_exactly_once(spark, tmp_path, sidecar):
     """The non-transitive Hamming chain a~b, b~c, a!~c: the greedy
     first run admits {a} only; a replay with the SAME run_id must
     return {a} verbatim (the committed decision short-circuit), NOT
-    re-admit c against the post-upsert ledger."""
+    re-admit c against the post-upsert ledger — on the exact probe
+    and on the sidecar-gated one alike."""
     from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
     from openmsistream_spark.operators.registry import make_registry
 
@@ -295,12 +297,16 @@ def test_incremental_chain_replay_is_exactly_once(spark, tmp_path):
     )
     first = {
         r.media_id
-        for r in incremental_fingerprint_neardup(batch, reg, run_id="B0").collect()
+        for r in incremental_fingerprint_neardup(
+            batch, reg, run_id="B0", sidecar=sidecar
+        ).collect()
     }
     assert first == {1}  # b dropped by a, c dropped by b (greedy)
     replay = {
         r.media_id
-        for r in incremental_fingerprint_neardup(batch, reg, run_id="B0").collect()
+        for r in incremental_fingerprint_neardup(
+            batch, reg, run_id="B0", sidecar=sidecar
+        ).collect()
     }
     assert replay == {1}  # NOT {1, 3}: committed decision wins
     assert {r.media_id for r in reg.read().collect()} == {1}
@@ -308,42 +314,69 @@ def test_incremental_chain_replay_is_exactly_once(spark, tmp_path):
     # documented near-dup asymmetry vs exact dedup
     fresh = {
         r.media_id
-        for r in incremental_fingerprint_neardup(batch, reg, run_id="B1").collect()
+        for r in incremental_fingerprint_neardup(
+            batch, reg, run_id="B1", sidecar=sidecar
+        ).collect()
     }
     assert fresh == {3}
 
 
-def test_incremental_refuses_media_id_content_churn(spark, tmp_path):
+@pytest.mark.parametrize("sidecar", [False, True])
+def test_incremental_refuses_media_id_content_churn(spark, tmp_path, sidecar):
     """Re-ingesting an already-admitted media_id with DIFFERENT content
     (a far fingerprint, so the hamming probe does not block it) must
     REFUSE rather than silently re-tag the ledger row's run_id — that
     re-tag would shrink the earlier run's exactly-once replay set
     (advisor finding, round 14). Unchanged content under the same id
-    stays a silent no-admit (blocked at hamming 0), not an error."""
+    stays a silent no-admit (blocked at hamming 0), not an error. On
+    the gated path the id bloom has no false negatives, so the guard
+    still fires behind it."""
     from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
     from openmsistream_spark.operators.registry import make_registry
+
+    def run(df, run_id):
+        return incremental_fingerprint_neardup(
+            df, reg, run_id=run_id, sidecar=sidecar
+        ).collect()
 
     reg = make_registry(spark, str(tmp_path / "led"), ["media_id"])
     fp1 = _to_signed64(0x0123456789ABCDEF)
     run1 = spark.createDataFrame([(1, fp1)], "media_id long, fingerprint long")
-    assert {
-        r.media_id
-        for r in incremental_fingerprint_neardup(run1, reg, run_id="B0").collect()
-    } == {1}
+    assert {r.media_id for r in run(run1, "B0")} == {1}
     # same id, unchanged fingerprint, new run: blocked, no error
-    out = incremental_fingerprint_neardup(run1, reg, run_id="B1").collect()
-    assert out == []
+    assert run(run1, "B1") == []
     # same id, changed content (far fingerprint): refuse
     churn = spark.createDataFrame(
         [(1, _to_signed64(0x7EDCBA9876543210))], "media_id long, fingerprint long"
     )
     with pytest.raises(ValueError, match="already in the ledger"):
-        incremental_fingerprint_neardup(churn, reg, run_id="B2")
+        run(churn, "B2")
     # the refusal left the ledger intact: B0's replay is unharmed
-    assert {
-        r.media_id
-        for r in incremental_fingerprint_neardup(run1, reg, run_id="B0").collect()
-    } == {1}
+    assert {r.media_id for r in run(run1, "B0")} == {1}
+
+
+def test_incremental_empty_first_batch_creates_ledger(spark, tmp_path):
+    """The one difference between the two commit steps: the exact path
+    upserts even an empty admit, so an empty FIRST batch on a fresh
+    ledger (``sidecar="auto"`` picks the exact probe there) still
+    creates the ledger — the media sink's ``refuse_lost_ledger`` reads
+    a missing ledger at batch 1 as a lost one. The next batch then
+    admits normally."""
+    from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
+    from openmsistream_spark.operators.registry import make_registry
+
+    reg = make_registry(
+        spark, str(tmp_path / "led"), ["media_id"], backend="log", insert_only=True
+    )
+    empty = spark.createDataFrame([], "media_id long, fingerprint long")
+    assert incremental_fingerprint_neardup(empty, reg, run_id="B0").collect() == []
+    assert reg.exists()
+    batch = spark.createDataFrame(
+        [(1, 0), (2, _to_signed64(0x0123456789ABCDEF))],
+        "media_id long, fingerprint long",
+    )
+    got = incremental_fingerprint_neardup(batch, reg, run_id="B1").collect()
+    assert {r.media_id for r in got} == {1, 2}
 
 
 def test_planted_neardup_recall_end_to_end(spark):

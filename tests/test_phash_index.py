@@ -113,19 +113,6 @@ def test_sidecar_refuses_param_change(spark, tmp_path):
         _run(spark, reg, [("b1", FAR)], "r1", max_hamming=2, sidecar=True)
 
 
-def test_sidecar_churn_refusal_still_fires(spark, tmp_path):
-    """The media_id collision guard survives the bloom gate: the id
-    bloom has no false negatives, so re-ingesting a ledgered id with
-    different content still refuses."""
-    from openmsistream_spark.operators.registry import make_registry
-
-    reg = make_registry(spark, f"{tmp_path}/led", ["media_id"], backend="log",
-                        insert_only=True)
-    _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
-    with pytest.raises(ValueError, match="already in the ledger"):
-        _run(spark, reg, [("a1", FAR)], "r1", sidecar=True)
-
-
 def test_sidecar_tiny_bloom_resizes_and_stays_exact(spark, tmp_path):
     """A deliberately saturated bloom (tiny mask) must auto-resize and
     never change verdicts — saturation only costs extra exact checks."""
