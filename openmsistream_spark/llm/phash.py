@@ -294,7 +294,7 @@ def _combo_keyed(
     """(_id, _fp) → exploded (_id, _fp, combo, combo_key): one row per
     C(blocks, blocks-max_hamming) block combination, the selected block
     values packed into one BIGINT key. Shared by the self-join pair
-    sweep and the cross-run ledger probe."""
+    sweep and the probe sidecar's write-time combo index."""
     width, mask, combos = _combo_params(bits, blocks, max_hamming)
 
     def _key(combo) -> "F.Column":
@@ -376,19 +376,13 @@ def hamming_combo_pairs(
     )
 
 
-#: ledger size (bytes on disk, cheap driver-side listing — no job) past
-#: which ``sidecar="auto"`` switches the probe from the exact
-#: O(ledger) explode+join to the bloom-gated write-time index. Below
-#: it the exact probe is CHEAPER: the sidecar's per-batch constant
-#: (meta read/write, 2 bloom builds, index append ≈ 6 extra jobs) buys
-#: nothing while the whole ledger fits a few shuffle partitions —
-#: measured in STRESS_MEDIA_LEDGER (exact probe wall grows ~+7 s per
-#: 190k rows; the gated path is flat but pays its constant at every
-#: size). ~4 MiB of ledger parquet ≈ 10^5 fingerprint rows, the
-#: measured crossover region; past it the gate wins at every size and
-#: the one-time repair that builds the index is a single old-style
-#: probe's worth of work (amortized O(1)/row).
-SIDECAR_AUTO_MIN_BYTES = 4 << 20
+#: ledger rows x batch rows past which ``sidecar="auto"`` leaves the
+#: broadcast nested-loop probe for the bloom-gated sidecar: the
+#: measured crossover on a 4-core box, where a 1M-row ledger x 10k-row
+#: batch took 30.8 s per call on the NLJ vs 28.2 s gated, and the NLJ
+#: grows ~3.7 ns per further pair while the gated call stays near flat
+#: (SCALING.md, "Settled: the NLJ pair budget").
+NLJ_PAIR_BUDGET = 10**10
 
 
 def incremental_fingerprint_neardup(
@@ -417,10 +411,7 @@ def incremental_fingerprint_neardup(
     within-batch sweep would pair unaligned frames.
 
     The ledger holds (media_id, fingerprint, run_id) — 24 bytes/item,
-    never content. Both the ledger probe and the within-batch sweep use
-    Manku combination keys (``_combo_keyed``), so the probe is an
-    equi-join on near-singleton buckets at any ledger size — the
-    crawl-scale shape, with the h <= blocks-1 budget bound.
+    never content.
 
     A media_id must not be re-ingested with DIFFERENT content across
     runs: the ledger upsert is keyed on media_id, and re-tagging an
@@ -460,16 +451,23 @@ def incremental_fingerprint_neardup(
     1. replay short-circuit: ledger rows tagged ``run_id`` ARE the
        committed decision and are returned verbatim;
     2. gated path only — coverage check: sidecar row count vs ledger
-       row count (a footer-only count); a mismatch (crash window, lost
-       sidecar, pre-sidecar ledger, out-of-band append) triggers an
-       exact repair of exactly the uncovered rows;
-    3. blocked ids: the exact path equi-joins the batch's combo keys
-       against the whole ledger's combo explode (O(ledger)); the gated
-       path marks them against the sidecar's broadcast bloom, skips
+       row count (a footer-only count, also taken for the "auto"
+       policy and the empty-ledger rule); a mismatch (crash window,
+       lost sidecar, pre-sidecar ledger, out-of-band append) triggers
+       an exact repair of exactly the uncovered rows;
+    3. blocked ids: the exact path evaluates the predicate itself,
+       ``bit_count(fingerprint ^ _fp) <= max_hamming``, as a broadcast
+       nested-loop join (NLJ) of a ledger scan against the pinned
+       batch — ledger x batch pairs of codegen'd bit counts and no
+       ledger shuffle; the batch is the broadcast side because the
+       trigger bounds it, while the ledger grows without bound. The
+       gated path marks the batch's Manku combination keys
+       (``_combo_keyed``) against the sidecar's broadcast bloom, skips
        negatives and verifies positives exactly against the write-time
        combo index (pushed IN filter on sorted segments) — O(batch),
        and the bloom alone never blocks or admits anything;
-    4. within-batch keep-first sweep;
+    4. within-batch keep-first sweep: the same NLJ of the survivors
+       against themselves with ``id_a < id_b``, on both paths;
     5. media_id collision guard — on the gated path behind the id
        bloom, so a no-overlap batch pays one row-local mark pass and
        no ledger join;
@@ -480,13 +478,15 @@ def incremental_fingerprint_neardup(
        before the sidecar record is healed by step 2 next call;
     7. the result is re-derived from the committed ledger.
 
+    An empty ledger counts as no ledger on both paths.
+
     ``sidecar=True`` keeps the sidecar and its combo index next to the
     ledger (``<path>.probeidx`` — see ``phash_index``); a lost, stale
     or pre-existing-ledger sidecar costs one exact O(ledger) repair,
-    then probes are gated again. ``sidecar=False`` is the exact probe.
-    Both paths admit identical sets, replay identically and refuse the
-    same churn. ``sidecar_opts`` forwards sizing/policy knobs to
-    ``FingerprintProbeSidecar`` (``combo_m_bits``, ``k``,
+    then probes are gated again. ``sidecar=False`` always takes the
+    NLJ. Both paths admit identical sets, replay identically and
+    refuse the same churn. ``sidecar_opts`` forwards sizing/policy
+    knobs to ``FingerprintProbeSidecar`` (``combo_m_bits``, ``k``,
     ``max_pushdown_keys``, ``resize="auto"|"manual"``, ``max_m_bits``,
     …): pre-size ``combo_m_bits`` for the expected ledger scale and/or
     set ``resize="manual"`` + schedule
@@ -494,15 +494,13 @@ def incremental_fingerprint_neardup(
     keep the amortized mask-rebuild pause out of ``foreachBatch``
     (SCALING.md recipe).
 
-    ``sidecar="auto"`` (default) picks by ledger size: the exact probe
-    while the ledger is below ``SIDECAR_AUTO_MIN_BYTES`` on disk (its
-    whole-ledger explode is cheaper than the sidecar's per-batch
-    constant there), the gated path past it — and always the gated
-    path once a sidecar exists (keeping an existing index current is
-    cheaper than abandoning it). The switchover builds the index via
-    the normal repair path: one exact probe's worth of work, once.
-    Both paths produce identical admitted sets, so "auto" is a pure
-    cost policy (guide §2: scale-adaptive, not tuned to either end).
+    ``sidecar="auto"`` (default) picks by pair count: the NLJ while
+    ledger rows x batch rows stay within ``NLJ_PAIR_BUDGET``, the gated
+    path past it — and always the gated path once a sidecar exists
+    (keeping an existing index current is cheaper than abandoning it).
+    The switchover builds the index via the normal repair path: one
+    O(ledger) combo explode, once. Both paths produce identical
+    admitted sets, so "auto" is a pure cost policy.
     """
     import uuid
 
@@ -511,15 +509,6 @@ def incremental_fingerprint_neardup(
     run_id = run_id if run_id is not None else uuid.uuid4().hex
     batch = fps.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
     spark = batch.sparkSession
-    if sidecar == "auto":
-        from ..operators.registry import HadoopFS
-
-        fs = HadoopFS(spark, registry.path)
-        base = registry.path.rstrip("/") + ".probeidx"
-        sidecar = fs.exists(f"{base}/meta") or (
-            registry.exists()
-            and fs.size_bytes(registry.path) >= SIDECAR_AUTO_MIN_BYTES
-        )
 
     def committed() -> DataFrame:
         # the ledger's run_id rows are the result (durable; replay-identical)
@@ -538,32 +527,22 @@ def incremental_fingerprint_neardup(
 
     sc = None
     seen = registry.read()
+    ledger_count = 0
     try:
         if seen is not None:
-            if not sidecar:
-                # a compact ledger reads as FEW partitions (a one-file
-                # delta segment is one), which would serialize the 56x
-                # combo explode of the probe onto one core — measured
-                # 20.7 s single-partition vs 5.3 s at session
-                # parallelism on a 190k-row ledger. The repartition
-                # shuffle moves only 24-byte rows, orders of magnitude
-                # cheaper than the serial explode it prevents.
-                par = spark.sparkContext.defaultParallelism
-                if seen.rdd.getNumPartitions() < par:
-                    seen = seen.repartition(par)
-                # the exact path's ledger frame feeds THREE actions per
-                # batch (short-circuit check, combo probe, collision-
-                # guard probe) — persist so the backend's read plan (a
-                # multi-segment union/fold on the log backend, a scan on
-                # parquet) executes once, not three times; ledger rows
-                # are 24 bytes each, so this spills gracefully. The
-                # gated path never persists the ledger: it touches it
-                # only through the pushed run_id scan below, a
-                # footer-only count and the guard's semi-join.
-                seen = pin(seen)
             # same-run_id short-circuit: committed decisions are the result
             if seen.filter(F.col("run_id") == run_id).limit(1).count() > 0:
                 return committed()
+            ledger_count = seen.count()
+        # the batch fingerprints feed the probe, both sides of the sweep,
+        # the guard and the commit — without a persist the upstream Arrow
+        # decode+hash stage would re-execute in each branch
+        pinned = pin(batch)
+        if sidecar == "auto":
+            meta = registry.path.rstrip("/") + ".probeidx/meta"
+            sidecar = registry.fs.exists(meta) or (
+                ledger_count > 0 and ledger_count * pinned.count() > NLJ_PAIR_BUDGET
+            )
         if sidecar:
             from .phash_index import FingerprintProbeSidecar
 
@@ -571,80 +550,45 @@ def incremental_fingerprint_neardup(
                 spark, registry.path, bits, blocks, max_hamming, **(sidecar_opts or {})
             )
             sc.load_or_init()
-            ledger_count = seen.count() if seen is not None else 0
             if sc.n_items != ledger_count:
                 sc.repair(seen, ledger_count)
-            if not ledger_count:
-                seen = None  # nothing committed to probe or guard against
+            # the combo explode feeds the bloom probe and record(): pin it
+            keyed = pin(_combo_keyed(pinned, bits, blocks, max_hamming))
+        if not ledger_count:
+            seen = None  # nothing committed to probe or guard against
 
-        # the batch fingerprints feed the probe, the self-join (both
-        # sides) and the admitted anti-join — without a persist the
-        # upstream Arrow decode+hash stage would re-execute in each
-        # branch
-        pinned = pin(batch)
-        # pin the batch's 56× combo explode too: the ledger probe, BOTH
-        # sides of the within-batch sweep and the sidecar's index append
-        # consume it — re-deriving it from the post-anti-join survivors
-        # re-ran the explode + key packing once per consumer (guide §1.2
-        # per-task work; an anti-join of the already-exploded rows on
-        # _id yields the identical rowset, explode is per-row
-        # deterministic)
-        keyed_full = pin(_combo_keyed(pinned, bits, blocks, max_hamming))
-        keyed, surv = keyed_full, pinned
+        def near(left: DataFrame, right: DataFrame, cond=None) -> DataFrame:
+            # the Hamming predicate as a broadcast nested-loop join: the
+            # right side is always batch-bounded
+            within = F.expr(f"bit_count(_lfp ^ _fp) <= {int(max_hamming)}")
+            if cond is not None:
+                within = within & cond
+            return left.join(F.broadcast(right), within)
 
         # vs-ledger probe: any prior fingerprint within budget blocks the id
+        surv = pinned
         if seen is not None:
             if sc is not None:
-                blocked = sc.blocked_ids(keyed_full)
+                blocked = sc.blocked_ids(keyed)
             else:
-                seen_keyed = _combo_keyed(
-                    seen.select(
-                        F.col("media_id").alias("_id"),
-                        F.col("fingerprint").alias("_fp"),
-                    ),
-                    bits,
-                    blocks,
-                    max_hamming,
-                ).select("combo", "combo_key", F.col("_fp").alias("_ledger_fp"))
-                # merge hint on the LEDGER explode: its true size is
-                # unbounded (56× ledger rows) but Catalyst's Generate
-                # stats under-estimate it, so size-based planning can
-                # pick it as a broadcast side — reproduced at a
-                # 1.3M-row ledger (8.9 GiB built relation vs the 8 GiB
-                # cap) once the batch explode gained accurate cached
-                # stats. Guide §3.1: never broadcast the side that grows
-                # without bound; the shuffle this forces moves 40-byte
-                # key rows.
-                blocked = (
-                    keyed_full.join(seen_keyed.hint("merge"), ["combo", "combo_key"])
-                    .filter(F.expr("bit_count(_fp ^ _ledger_fp)") <= max_hamming)
-                    .select("_id")
-                    .distinct()
+                # a one-file ledger scans on ONE task: 28.7 s vs 10.5 s at
+                # session parallelism for a 1M x 10k probe on 4 cores
+                ledger_fps = seen.select(F.col("fingerprint").alias("_lfp")).repartition(
+                    spark.sparkContext.defaultParallelism
                 )
-            surv = pinned.join(blocked, "_id", "left_anti")
-            keyed = keyed_full.join(blocked, "_id", "left_anti")
+                blocked = near(ledger_fps, pinned).select("_id").distinct()
+            surv = pinned.join(F.broadcast(blocked), "_id", "left_anti")
 
         # within-batch keep-first: drop ids matching a smaller surviving id
-        a = keyed.select(
-            F.col("_id").alias("id_a"), F.col("_fp").alias("fp_a"), "combo", "combo_key"
-        )
-        b = keyed.select(
-            F.col("_id").alias("id_b"), F.col("_fp").alias("fp_b"), "combo", "combo_key"
-        )
+        first = surv.select(F.col("_id").alias("_first"), F.col("_fp").alias("_lfp"))
         dup_ids = (
-            a.join(b, ["combo", "combo_key"])
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.expr("bit_count(fp_a ^ fp_b)") <= max_hamming)
-            )
-            .select(F.col("id_b").alias("_id"))
-            .distinct()
+            near(first, surv, F.col("_first") < F.col("_id")).select("_id").distinct()
         )
         # the collision guard and the commit both consume `admitted`
         # (two actions): persist so the probe + within-batch sweep joins
         # execute once — the pinned decode output alone doesn't cover
         # the join work
-        admitted = pin(surv.join(dup_ids, "_id", "left_anti"))
+        admitted = pin(surv.join(F.broadcast(dup_ids), "_id", "left_anti"))
 
         # media_id collision guard: the upsert is keyed on media_id, so
         # re-ingesting an already-ledgered media_id with DIFFERENT
@@ -657,9 +601,9 @@ def incremental_fingerprint_neardup(
         # gated path first asks the id bloom (no false negatives for
         # covered rows); then a key-only equi-join of the PINNED
         # pre-probe batch vs 16-byte ledger rows (evaluating the
-        # post-anti-join frame would run the combo probe chain, the cost
-        # the gate exists to avoid); only a batch that actually shares
-        # media_ids with the ledger pays the precise admitted-side check.
+        # post-anti-join frame would run the probe chain first); only a
+        # batch that actually shares media_ids with the ledger pays the
+        # precise admitted-side check.
         if seen is not None and (sc is None or sc.any_id_maybe_seen(pinned)):
             seen_ids = seen.select(F.col("media_id").alias("_id"))
             if pinned.join(seen_ids, "_id", "left_semi").limit(1).count() > 0:
@@ -691,14 +635,13 @@ def incremental_fingerprint_neardup(
             # writes neither: replaying it recomputes from the same
             # ledger state and re-derives the same empty set; record()
             # still runs to release the probe's pins. The admitted
-            # rows' combo explode is derived from the pinned keyed_full
-            # (sweep survivors minus within-batch dups) so record() does
-            # not re-explode + re-hash the admitted rows from scratch.
+            # rows' combo explode is the pinned one restricted to the
+            # admitted ids, so record() does not re-explode + re-hash.
             sc.record(
                 rows.drop("run_id"),
                 run_id,
                 n_admitted,
-                exploded=keyed.join(dup_ids, "_id", "left_anti").select(
+                exploded=keyed.join(admitted.select("_id"), "_id", "left_semi").select(
                     "combo",
                     "combo_key",
                     F.col("_id").alias("media_id"),

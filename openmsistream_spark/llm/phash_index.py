@@ -2,13 +2,12 @@
 fingerprint probe — makes the common per-micro-batch ledger probe
 O(batch) instead of O(ledger).
 
-Why: ``phash.incremental_fingerprint_neardup``'s exact probe re-scans
-and 56×-explodes the ENTIRE admitted ledger every micro-batch (the
-round-15 stress isolation: wall 3.8→17.8 s as the ledger grows
-0→190k rows while upserts and the control leg stay flat —
-STRESS_MEDIA_LEDGER.json). At a crawl-scale ledger (10^9 rows) that
-explode generates TB per batch. This sidecar removes the per-batch
-ledger-side work:
+Why: ``phash.incremental_fingerprint_neardup``'s exact probe is a
+broadcast nested-loop join that evaluates ``bit_count`` on every
+(ledger row, batch row) pair — cheap while that product is small, but
+O(ledger x batch) per micro-batch. Past ``phash.NLJ_PAIR_BUDGET``
+pairs the ``sidecar="auto"`` policy switches to this sidecar, which
+removes the per-batch ledger-side work:
 
 - **Write-time combo index**: the 56× combination-key explode of each
   admitted row is computed ONCE, at admit time, and appended to a
@@ -34,7 +33,7 @@ ledger-side work:
   ledger, an out-of-band append), REPAIRS by exploding exactly the
   uncovered rows — the exact-probe fallback. A lost or deleted
   sidecar is the same case with zero covered rows: one full O(ledger)
-  repair (the cost of a single old-style probe), then flat again.
+  repair (one combo explode of the whole ledger), then flat again.
 
 Every per-batch term is O(batch), amortized — the round-16 XL stress
 showed the FIRST sidecar cut only the ledger-ROW term and left four
@@ -922,8 +921,8 @@ class FingerprintProbeSidecar:
         ``exploded``, when given, must equal ``_explode(admitted)``
         (the caller already holds the batch's 56× combo explode pinned
         — ``phash.incremental_fingerprint_neardup``'s gated path
-        derives the admitted subset from it by two anti-joins instead
-        of re-exploding + re-hashing the admitted rows from scratch)."""
+        derives the admitted subset from it by a semi-join on the
+        admitted ids instead of re-exploding + re-hashing them)."""
         from pyspark import StorageLevel
 
         try:
@@ -957,8 +956,8 @@ class FingerprintProbeSidecar:
         exact-probe fallback path. Explodes only the UNCOVERED rows
         (rows whose run_id the sidecar has not recorded) — after a
         normal crash that is one batch; for a lost sidecar or a
-        pre-sidecar ledger it is the whole table, i.e. exactly one
-        old-style O(ledger) probe's worth of work, once."""
+        pre-sidecar ledger it is the whole table, i.e. one O(ledger)
+        combo explode, once."""
         if ledger is None or ledger_count == 0:
             self._clear_runs()
             self.n_items = 0
@@ -986,8 +985,8 @@ class FingerprintProbeSidecar:
         from pyspark import StorageLevel
 
         uncovered = uncovered.select("media_id", "fingerprint", "run_id")
-        # a full-ledger repair otherwise explodes+hashes from the few
-        # coalesced log segments — same widen rule as the exact probe
+        # a full-ledger repair otherwise explodes+hashes the few
+        # coalesced log segments on as few cores
         par = uncovered.sparkSession.sparkContext.defaultParallelism
         if uncovered.rdd.getNumPartitions() < par:
             uncovered = uncovered.repartition(par)

@@ -131,10 +131,15 @@ def bloom_novelty_stream_sink(
     ledger positions are only meaningful under the (n, m_bits, k) that
     wrote them. Returns the configured ``DataStreamWriter`` — caller
     picks the trigger and calls ``.start()``."""
+    from .params_guard import refuse_lost_ledger
+
     _guard = _params_guard(pos_registry, n, m_bits, k)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         _guard()
+        # past batch 0 a missing ledger was LOST: reading it as empty
+        # would mark every gram novel against outputs already written
+        refuse_lost_ledger(pos_registry, batch_id, "bloom_novelty_stream_sink")
         ledger = pos_registry.read()
         out = batch_novelty_against_ledger(
             batch_df,

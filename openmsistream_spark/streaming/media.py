@@ -91,12 +91,13 @@ def media_neardup_stream_sink(
     bound with admitted media, so the log backend's O(batch) appends
     (not parquet's O(ledger) rewrite) are the scale-safe choice;
     under "auto" a fresh path picks it via ``prefer="log"``. The
-    admission probe keeps a bloom sidecar + write-time combo index
-    beside the ledger (``<path>.probeidx`` — ``llm/phash_index``)
-    once the ledger crosses ``phash.SIDECAR_AUTO_MIN_BYTES`` (the
-    probe's ``sidecar="auto"`` policy: the exact probe is cheaper
-    below it), so the per-batch probe stays O(batch) at any ledger
-    size.
+    admission probe is a broadcast nested-loop Hamming join of the
+    ledger against the micro-batch while ledger rows x batch rows stay
+    within ``phash.NLJ_PAIR_BUDGET``; past it (the probe's
+    ``sidecar="auto"`` policy) it keeps a bloom sidecar + write-time
+    combo index beside the ledger (``<path>.probeidx`` —
+    ``llm/phash_index``), so the per-batch probe stays O(batch) at
+    any ledger size.
     ``modality="video"`` fingerprints each video as the MAJORITY-fold
     representative of its sampled keyframes (every ``video_every_nth``
     frames — part of the pinned params: a changed sampling rate would

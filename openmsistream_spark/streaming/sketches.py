@@ -89,7 +89,7 @@ def hll_distinct_stream_sink(
     a different bucket space, and max-merging across them silently
     estimates nonsense. Returns the configured ``DataStreamWriter`` —
     caller picks the trigger and calls ``.start()``."""
-    from .params_guard import sidecar_batch_guard
+    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
     _guard = sidecar_batch_guard(
         register_registry, {"p": p}, "hll_distinct_stream_sink"
@@ -99,6 +99,9 @@ def hll_distinct_stream_sink(
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         _guard()
+        # past batch 0 a missing ledger was LOST: merging into nothing
+        # would restart the distinct counts from zero
+        refuse_lost_ledger(register_registry, batch_id, "hll_distinct_stream_sink")
         regs = hll_registers(batch_df, key_col, gcols, p)
         merged = merge_registers(register_registry.read(), regs, gcols)
         # materialize before replace(): the merge plan reads the ledger
@@ -153,13 +156,16 @@ def cms_stream_sink(
     and validated on restart (``streaming/params_guard.py``) — deltas
     from a different geometry alias into the wrong counters. Returns
     the configured ``DataStreamWriter``."""
-    from .params_guard import sidecar_batch_guard
+    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
     _guard = sidecar_batch_guard(delta_registry, {"d": d, "w": w}, "cms_stream_sink")
     _guard()  # fail fast at build; re-checked per batch (race window)
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         _guard()
+        # past batch 0 a missing ledger was LOST: the counts would
+        # restart from this batch's deltas alone
+        refuse_lost_ledger(delta_registry, batch_id, "cms_stream_sink")
         delta = cms_counters(
             batch_df, key_col, d=d, w=w, weight_col=weight_col
         ).withColumn("batch", F.lit(int(batch_id)).cast("long"))

@@ -379,6 +379,87 @@ def test_incremental_empty_first_batch_creates_ledger(spark, tmp_path):
     assert {r.media_id for r in got} == {1, 2}
 
 
+def _keep_first_reference(ledger_fps, batch, h):
+    """Pure-Python admission rule: drop an item within ``h`` of any
+    ledger fingerprint, then drop a survivor within ``h`` of a smaller
+    surviving id (greedy keep-first)."""
+    surv = [
+        (i, fp) for i, fp in batch
+        if all(_hamming(fp, led) > h for led in ledger_fps)
+    ]
+    return {
+        i for i, fp in surv
+        if not any(j < i and _hamming(fp, g) <= h for j, g in surv)
+    }
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_incremental_probe_matches_bruteforce(spark, tmp_path, id_type):
+    """The NLJ probe (``sidecar=False``) against a brute-force
+    reference over two seeded runs: random fingerprints plus planted
+    copies at distance exactly h (blocked) and h+1 (admitted), an
+    a~b~c chain inside one batch, and second-run copies of a chain
+    member the first run dropped."""
+    import random
+
+    from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
+    from openmsistream_spark.operators.registry import make_registry
+
+    h = 3
+    rng = random.Random(7 if id_type == "long" else 8)
+
+    def flip(fp, n):
+        for b in rng.sample(range(64), n):
+            fp ^= 1 << b
+        return fp
+
+    def rand():
+        return rng.getrandbits(64)
+
+    a = rand()
+    b = flip(a, h)  # a~b and b~c, but c is 2h from a
+    c = b
+    for bit in [x for x in range(64) if not (a ^ b) >> x & 1][:h]:
+        c ^= 1 << bit
+    assert _hamming(a, c) == 2 * h
+    # positions 0-11 random, 12-14 the chain, 15 is h+1 from 0
+    run1 = [rand() for _ in range(12)] + [a, b, c, None]
+    run1[15] = flip(run1[0], h + 1)
+    # positions 16-25 random; 26/28 are h from run-1 admits, 27 is h+1;
+    # 29 repeats b (h from the admitted a), 30 is 1 from c (only b is
+    # near it, and b was never admitted)
+    run2 = [rand() for _ in range(10)]
+    run2 += [flip(run1[1], h), flip(run1[2], h + 1), flip(run1[3], h)]
+    run2 += [b, flip(c, 1)]
+    ids = rng.sample(range(1000), len(run1) + len(run2))
+    if id_type == "string":
+        ids = [f"m{i}" for i in ids]
+    ids[12:15] = sorted(ids[12:15])  # the chain runs a < b < c by id
+    batches = [list(zip(ids[:16], run1)), list(zip(ids[16:], run2))]
+
+    reg = make_registry(
+        spark, str(tmp_path / "led"), ["media_id"], backend="log", insert_only=True
+    )
+    ledger, wants = [], []
+    for n, rows in enumerate(batches):
+        want = _keep_first_reference(ledger, rows, h)
+        df = spark.createDataFrame(
+            [(i, _to_signed64(fp)) for i, fp in rows],
+            f"media_id {id_type}, fingerprint long",
+        )
+        got = incremental_fingerprint_neardup(
+            df, reg, max_hamming=h, run_id=f"R{n}", sidecar=False
+        ).collect()
+        assert {r.media_id for r in got} == want, f"run {n}"
+        ledger += [fp for i, fp in rows if i in want]
+        wants.append(want)
+    # the planted cases land on the intended side of the budget
+    assert {ids[k] for k in (0, 12, 15)} <= wants[0]
+    assert not {ids[k] for k in (13, 14)} & wants[0]
+    assert {ids[k] for k in (27, 30)} <= wants[1]
+    assert not {ids[k] for k in (26, 28, 29)} & wants[1]
+
+
 def test_planted_neardup_recall_end_to_end(spark):
     """The ANN_RECALL-style control: 30 distinct base images, each with
     a noised twin (4 perturbed pixels). Every planted (base, twin) pair

@@ -37,6 +37,39 @@ def _run(spark, reg, rows, run_id, **kw):
     }
 
 
+@pytest.fixture(scope="module")
+def r0_states(spark, tmp_path_factory):
+    """The two r0 ledgers most sidecar tests start from, built once per
+    module with ``sidecar=True``: ``[a1]`` and ``[a1, a2]``."""
+    from openmsistream_spark.operators.registry import make_registry
+
+    base = tmp_path_factory.mktemp("r0_states")
+    states = {"a1": [("a1", BASE)], "a1a2": [("a1", BASE), ("a2", FAR)]}
+    for name, rows in states.items():
+        reg = make_registry(spark, f"{base}/{name}", ["media_id"], backend="log",
+                            insert_only=True)
+        assert _run(spark, reg, rows, "r0", sidecar=True) == {r[0] for r in rows}
+    return base
+
+
+@pytest.fixture()
+def r0_copy(spark, tmp_path, r0_states):
+    """``r0_copy(name)`` -> (registry, ledger path): a private copy of an
+    r0 state, ledger and ``.probeidx`` both."""
+    from openmsistream_spark.operators.registry import make_registry
+
+    def copy(name, with_sidecar=True):
+        path = f"{tmp_path}/led"
+        shutil.copytree(f"{r0_states}/{name}", path)
+        if with_sidecar:
+            shutil.copytree(f"{r0_states}/{name}.probeidx", f"{path}.probeidx")
+        reg = make_registry(spark, path, ["media_id"], backend="log",
+                            insert_only=True)
+        return reg, path
+
+    return copy
+
+
 @pytest.fixture()
 def regs(spark, tmp_path):
     from openmsistream_spark.operators.registry import make_registry
@@ -67,16 +100,12 @@ def test_sidecar_matches_exact_probe(spark, regs):
     assert _run(spark, gated, b2, "r1", sidecar=True) == {"b3"}  # replay verbatim
 
 
-def test_sidecar_repairs_out_of_band_append(spark, tmp_path):
+def test_sidecar_repairs_out_of_band_append(spark, r0_copy):
     """Ledger rows the sidecar never covered (crash between ledger
     commit and sidecar update, or a direct registry upsert) must still
     block — the coverage check repairs from the ledger before probing,
     so the bloom can't have false negatives for committed rows."""
-    from openmsistream_spark.operators.registry import make_registry
-
-    reg = make_registry(spark, f"{tmp_path}/led", ["media_id"], backend="log",
-                        insert_only=True)
-    assert _run(spark, reg, [("a1", BASE)], "r0", sidecar=True) == {"a1"}
+    reg, _ = r0_copy("a1")  # r0 admitted {"a1"}
     # out-of-band append: the sidecar knows nothing about FAR
     reg.upsert(
         spark.createDataFrame([("oob", FAR, "rX")],
@@ -86,15 +115,11 @@ def test_sidecar_repairs_out_of_band_append(spark, tmp_path):
     assert got == {"b2"}  # FAR_NEAR1 blocked by the uncovered row
 
 
-def test_sidecar_lost_then_rebuilt(spark, tmp_path):
+def test_sidecar_lost_then_rebuilt(spark, r0_copy):
     """Deleting the sidecar must not change verdicts: the next call
     falls back to one exact O(ledger) repair (never admits on bloom
     alone), rebuilds, and subsequent calls are gated again."""
-    from openmsistream_spark.operators.registry import make_registry
-
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log", insert_only=True)
-    assert _run(spark, reg, [("a1", BASE), ("a2", FAR)], "r0", sidecar=True) == {"a1", "a2"}
+    reg, path = r0_copy("a1a2")  # r0 admitted {"a1", "a2"}
     shutil.rmtree(f"{path}.probeidx")
     got = _run(spark, reg, [("b1", NEAR2), ("b2", LONE)], "r1", sidecar=True)
     assert got == {"b2"}
@@ -103,12 +128,8 @@ def test_sidecar_lost_then_rebuilt(spark, tmp_path):
     assert got == set()
 
 
-def test_sidecar_refuses_param_change(spark, tmp_path):
-    from openmsistream_spark.operators.registry import make_registry
-
-    reg = make_registry(spark, f"{tmp_path}/led", ["media_id"], backend="log",
-                        insert_only=True)
-    _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
+def test_sidecar_refuses_param_change(spark, r0_copy):
+    reg, _ = r0_copy("a1")
     with pytest.raises(ValueError, match="different"):
         _run(spark, reg, [("b1", FAR)], "r1", max_hamming=2, sidecar=True)
 
@@ -137,17 +158,14 @@ def test_sidecar_tiny_bloom_resizes_and_stays_exact(spark, tmp_path):
     assert got == {"z2"}
 
 
-def test_sidecar_index_probe_is_pushdown_pruned(spark, tmp_path):
+def test_sidecar_index_probe_is_pushdown_pruned(spark, r0_copy):
     """The gated probe's index read must carry a pushed IN filter on
     combo_key (the write-time index is sorted by combo_key inside each
     segment so row-group stats prune the scan)."""
     from openmsistream_spark.llm.phash import _combo_keyed
     from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
-    from openmsistream_spark.operators.registry import make_registry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log", insert_only=True)
-    _run(spark, reg, [("a1", BASE), ("a2", FAR)], "r0", sidecar=True)
+    _, path = r0_copy("a1a2")
     sc_state = FingerprintProbeSidecar(spark, path, 64, 8, 3)
     sc_state.load_or_init()
     keyed = _combo_keyed(
@@ -161,10 +179,11 @@ def test_sidecar_index_probe_is_pushdown_pruned(spark, tmp_path):
     assert {r._id for r in blocked.collect()} == {"p1"}
 
 
-def test_auto_uses_exact_probe_below_threshold(spark, tmp_path):
-    """sidecar="auto" (the default) must NOT build a sidecar for a
-    small ledger — the exact probe is cheaper there — while admitting
-    exactly the same sets (pure cost policy)."""
+def test_auto_builds_no_sidecar_under_pair_budget(spark, tmp_path):
+    """sidecar="auto" (the default) must NOT build a sidecar while
+    ledger rows x batch rows stay within the pair budget — the NLJ
+    probe is cheaper there — while admitting exactly the same sets
+    (pure cost policy)."""
     import os
 
     from openmsistream_spark.operators.registry import make_registry
@@ -178,17 +197,13 @@ def test_auto_uses_exact_probe_below_threshold(spark, tmp_path):
     assert not os.path.exists(f"{path}.probeidx")
 
 
-def test_auto_keeps_maintaining_existing_sidecar(spark, tmp_path):
-    """Once a sidecar exists (an earlier run crossed the threshold or
+def test_auto_keeps_maintaining_existing_sidecar(spark, r0_copy):
+    """Once a sidecar exists (an earlier run crossed the pair budget or
     forced sidecar=True), auto keeps it current instead of letting it
     go stale-then-repair every batch."""
     from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
-    from openmsistream_spark.operators.registry import make_registry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log",
-                        insert_only=True)
-    _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
+    reg, path = r0_copy("a1")
     got = _run(spark, reg, [("b1", NEAR2), ("b2", LONE)], "r1")  # auto
     assert got == {"b2"}
     sc_state = FingerprintProbeSidecar(spark, path, 64, 8, 3)
@@ -196,41 +211,37 @@ def test_auto_keeps_maintaining_existing_sidecar(spark, tmp_path):
     assert sc_state.covered == {"r0", "r1"}  # auto batch was recorded
 
 
-def test_auto_switches_to_sidecar_past_threshold(spark, tmp_path, monkeypatch):
+def test_auto_switches_to_sidecar_past_pair_budget(spark, r0_copy, monkeypatch):
     """Auto must build the sidecar (via the normal repair path) once
-    the ledger's on-disk size crosses SIDECAR_AUTO_MIN_BYTES."""
+    ledger rows x batch rows exceed NLJ_PAIR_BUDGET — and not at the
+    budget itself."""
     import os
 
     from openmsistream_spark.llm import phash
-    from openmsistream_spark.operators.registry import make_registry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log",
-                        insert_only=True)
-    assert _run(spark, reg, [("a1", BASE)], "r0") == {"a1"}
+    reg, path = r0_copy("a1", with_sidecar=False)  # 1 ledger row, no sidecar
+    monkeypatch.setattr(phash, "NLJ_PAIR_BUDGET", 2)
+    # 1 x 2 pairs: at the budget, still the NLJ
+    assert _run(spark, reg, [("b1", FAR), ("b2", NEAR2)], "r1") == {"b1"}
     assert not os.path.exists(f"{path}.probeidx")
-    monkeypatch.setattr(phash, "SIDECAR_AUTO_MIN_BYTES", 1)
-    got = _run(spark, reg, [("b1", FAR)], "r1")
-    assert got == {"b1"}
+    # 2 x 2 pairs: past it
+    got = _run(spark, reg, [("c1", LONE), ("c2", FAR_NEAR1)], "r2")
+    assert got == {"c1"}
     assert os.path.exists(f"{path}.probeidx")  # repair built the index
     # and the now-existing sidecar keeps gating + blocking correctly
-    monkeypatch.setattr(phash, "SIDECAR_AUTO_MIN_BYTES", 4 << 20)
-    assert _run(spark, reg, [("c1", FAR_NEAR1), ("c2", LONE)], "r2") == {"c2"}
+    monkeypatch.setattr(phash, "NLJ_PAIR_BUDGET", 10**18)
+    assert _run(spark, reg, [("d1", LONE ^ 1), ("d2", _fp([2, 30]))], "r3") == {"d2"}
 
 
-def test_sidecar_cold_reload_replays_deltas(spark, tmp_path):
+def test_sidecar_cold_reload_replays_deltas(spark, r0_copy):
     """Per-batch mask persistence is a POSITION delta, not a mask
     rewrite; a cold load (no session cache) must fold snapshot +
     deltas back into the exact mask so verdicts are unchanged."""
     from openmsistream_spark.llm import phash_index
     from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
-    from openmsistream_spark.operators.registry import make_registry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log",
-                        insert_only=True)
-    # batch 1 commits the first snapshot; batches 2-3 append deltas
-    _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
+    # batch 1 (r0) commits the first snapshot; batches 2-3 append deltas
+    reg, path = r0_copy("a1")
     _run(spark, reg, [("a2", FAR)], "r1", sidecar=True)
     _run(spark, reg, [("a3", LONE)], "r2", sidecar=True)
     sc_state = FingerprintProbeSidecar(spark, path, 64, 8, 3)
@@ -277,7 +288,7 @@ def test_sidecar_snapshot_rollover_bounds_deltas(spark, tmp_path):
 
 
 @pytest.mark.parametrize("layout", ["inline_masks", "inline_runs"])
-def test_sidecar_legacy_meta_is_refused(spark, tmp_path, layout):
+def test_sidecar_legacy_meta_is_refused(spark, r0_copy, layout):
     """A meta table in a layout this class does not write — masks
     chunked inline (no snap_id column), or covered runs inline instead
     of in the run log — is refused at load with the delete-and-repair
@@ -288,13 +299,9 @@ def test_sidecar_legacy_meta_is_refused(spark, tmp_path, layout):
     from openmsistream_spark.llm import phash_index
     from openmsistream_spark.llm.phash_index import (_META_SCHEMA,
                                                      FingerprintProbeSidecar)
-    from openmsistream_spark.operators.registry import (ParquetRegistry,
-                                                        make_registry)
+    from openmsistream_spark.operators.registry import ParquetRegistry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log",
-                        insert_only=True)
-    _run(spark, reg, [("a1", BASE)], "r0", sidecar=True)
+    reg, path = r0_copy("a1")
     live = FingerprintProbeSidecar(spark, path, 64, 8, 3)
     live.load_or_init()
     if layout == "inline_masks":
@@ -371,18 +378,14 @@ def test_sidecar_meta_commit_is_one_row(spark, tmp_path):
     assert sc.n_items == 5
 
 
-def test_sidecar_empty_admit_writes_nothing(spark, tmp_path):
+def test_sidecar_empty_admit_writes_nothing(spark, r0_copy):
     """A batch that admits nothing must not touch the sidecar at all:
     the ledger holds no rows for that run (repair scopes by ledger
     rows), and a replay recomputes the same empty set from the same
     ledger state."""
     from openmsistream_spark.llm.phash_index import FingerprintProbeSidecar
-    from openmsistream_spark.operators.registry import make_registry
 
-    path = f"{tmp_path}/led"
-    reg = make_registry(spark, path, ["media_id"], backend="log",
-                        insert_only=True)
-    assert _run(spark, reg, [("a1", BASE)], "r0", sidecar=True) == {"a1"}
+    reg, path = r0_copy("a1")  # r0 admitted {"a1"}
     before = sorted(
         (r.kind, r.chunk)
         for r in FingerprintProbeSidecar(spark, path, 64, 8, 3).meta.read().collect()

@@ -269,3 +269,50 @@ def test_sketch_sinks_refuse_parameter_drift(spark, tmp_path):
             src, lreg, str(tmp_path / "cout"), str(tmp_path / "cckpt3"),
             key_col="uid", d=3, w=64,
         )
+
+
+@pytest.mark.parametrize("sink", ["bloom", "hll", "cms"])
+def test_lost_ledger_refused_mid_stream(spark, tmp_path, sink):
+    """Ledger gone + ``_params`` sidecar present + checkpoint past batch
+    0 is only reachable by LOSING the ledger — each ledger sink must
+    refuse, not mark every gram novel or restart its counts from zero
+    against outputs already written."""
+    from openmsistream_spark.streaming.bloom import bloom_novelty_stream_sink
+    from openmsistream_spark.streaming.sketches import cms_stream_sink
+
+    if sink == "bloom":
+        schema, keys = "doc_id long, text string", ["pos"]
+        rows = [[(0, "a0 a1 a2 a3 a4 a5 a6 a7 a8")], [(1, "b0 b1 b2 b3 b4 b5 b6 b7")]]
+
+        def build(src, reg, out_dir, ckpt):
+            return bloom_novelty_stream_sink(src, reg, out_dir, ckpt, n=8,
+                                             m_bits=1 << 16, k=4)
+    else:
+        schema, rows = SCHEMA, BATCHES[:2]
+        if sink == "hll":
+            keys = ["event_type", "bucket"]
+
+            def build(src, reg, out_dir, ckpt):
+                return hll_distinct_stream_sink(src, reg, out_dir, ckpt, key_col="uid",
+                                                group_cols=["event_type"], p=P)
+        else:
+            keys = ["i", "pos", "batch"]
+
+            def build(src, reg, out_dir, ckpt):
+                return cms_stream_sink(src, reg, out_dir, ckpt, key_col="uid", d=3, w=64)
+
+    reg = make_registry(spark, str(tmp_path / "led"), keys)
+    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+
+    def start(b):
+        spark.createDataFrame(rows[b], schema).coalesce(1).write.parquet(
+            f"{in_dir}/b={b}"
+        )
+        src = spark.readStream.schema(schema).parquet(f"{in_dir}/b=*")
+        return build(src, reg, out_dir, ckpt).trigger(availableNow=True).start()
+
+    assert start(0).awaitTermination(300)
+    assert reg.exists()
+    reg.fs.delete(reg.path)  # simulate loss; sidecar + checkpoint survive
+    with pytest.raises(Exception, match="lost|NO ledger"):
+        start(1).awaitTermination(300)

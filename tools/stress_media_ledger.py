@@ -12,9 +12,8 @@ records per-batch wall + shuffle. Fingerprints are synthesized JVM-side
 (xxhash64 — effectively random 64-bit, so almost nothing collides and
 the ledger grows by ~B rows per batch): the Arrow decode stage is
 EXCLUDED on purpose — it is per-batch constant and its linearity is
-already measured in STRESS_MEDIAFP; the claim under test here is that
-the ledger probe (combo-key equi-join) and the upsert stay flat-ish as
-the ledger grows.
+already measured in STRESS_MEDIAFP; the claim under test here is how
+the ledger probe and the upsert grow with the ledger.
 
 Round 15: runs the sweep on BOTH registry backends. The "parquet"
 backend's upsert is an atomic full rewrite — O(ledger) per batch, the
@@ -22,16 +21,16 @@ shallow-linear ramp round 14 measured (+0.35 s per +10k rows). The
 "log" backend (LogStructuredRegistry) appends an O(batch) delta
 segment and amortizes compaction by the doubling rule, so its
 per-batch wall should stay FLAT in ledger size — that flatness is the
-claim this sweep now gates (VERDICT r14 next-round #2). In both cases
-the probe is an equi-join on near-singleton 40-bit combo buckets:
-candidate volume stays ~B at ANY ledger size (never batch x ledger);
-a cliff or super-linear curve on either backend would falsify the
-bucket construction itself.
+claim this sweep now gates (VERDICT r14 next-round #2). The "@exact"
+probe is a broadcast nested-loop join that checks every (ledger row,
+batch row) pair, so its wall grows linearly with ledger x batch; the
+gated sidecar probe (no suffix) equi-joins near-singleton 40-bit combo
+buckets, so its candidate volume stays ~B at any ledger size.
 
 Writes STRESS_MEDIA_LEDGER.json. Usage:
     python tools/stress_media_ledger.py [n_batches batch_size [backends]]
 (default 20 batches x 10000 items, backends "parquet,log@exact,log";
- "@exact" = sidecar off (the round-15 exact probe), "@reset" = wipe
+ "@exact" = sidecar off (the nested-loop probe), "@reset" = wipe
  the ledger each batch — the session-age control leg)
 """
 
@@ -72,8 +71,8 @@ def run_backend(spark, backend: str, n_batches: int, batch_size: int) -> dict:
 
     backend, _, mode = backend.partition("@")
     reset_each = mode == "reset"
-    # "@exact" disables the round-16 bloom sidecar + write-time combo
-    # index, i.e. the round-15 exact O(ledger) probe — kept as the
+    # "@exact" disables the bloom sidecar + write-time combo index,
+    # i.e. the nested-loop O(ledger x batch) probe — kept as the
     # comparison leg that the sidecar's flatness is judged against
     use_sidecar = mode != "exact"
     tmp = tempfile.mkdtemp(prefix="media_ledger_stress_")
