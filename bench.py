@@ -229,9 +229,10 @@ def _incremental_media_ingest(spark, sf_dir):
     """Cross-run MEDIA near-dup at bench scale: the documents table
     framed as PGM images, ingested as two batches (even/odd doc_id)
     through incremental_fingerprint_neardup against a fresh durable
-    fingerprint ledger — times the full incremental path (Arrow
-    decode+hash, Manku combo-key ledger probe, within-batch keep-first,
-    two upserts, admitted re-derive), the per-batch loop of a
+    fingerprint ledger — times the full incremental path (one Arrow
+    decode+hash per batch onto the driver, the broadcast nested-loop
+    Hamming ledger probe, within-batch keep-first, two upserts; each
+    call returns the rows it upserted), the per-batch loop of a
     continuous multimodal corpus build."""
     import os
     import shutil

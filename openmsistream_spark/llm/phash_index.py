@@ -903,7 +903,6 @@ class FingerprintProbeSidecar:
         admitted: DataFrame,
         run_id: str,
         n_admitted: int,
-        exploded: DataFrame | None = None,
     ) -> None:
         """Cover one committed batch: append its exploded combo rows to
         the index, absorb its keys into the masks (positions delta +
@@ -916,13 +915,7 @@ class FingerprintProbeSidecar:
         for the run, so there is no coverage to record (repair scopes
         by ledger rows) and a replay recomputes the same empty set from
         the same ledger state — the r16 layout paid a full meta rewrite
-        here, one row per run id ever, every batch.
-
-        ``exploded``, when given, must equal ``_explode(admitted)``
-        (the caller already holds the batch's 56× combo explode pinned
-        — ``phash.incremental_fingerprint_neardup``'s gated path
-        derives the admitted subset from it by a semi-join on the
-        admitted ids instead of re-exploding + re-hashing them)."""
+        here, one row per run id ever, every batch."""
         from pyspark import StorageLevel
 
         try:
@@ -934,9 +927,7 @@ class FingerprintProbeSidecar:
             # explode is 56×batch rows (~1.7 GB at a 500k batch);
             # a local sequential disk reread is cheap next to the
             # recompute
-            if exploded is None:
-                exploded = self._explode(admitted)
-            exploded = exploded.persist(StorageLevel.DISK_ONLY)
+            exploded = self._explode(admitted).persist(StorageLevel.DISK_ONLY)
             self._pins.append(exploded)
             self.index.upsert(exploded)
             self._absorb(exploded, admitted, n_admitted)

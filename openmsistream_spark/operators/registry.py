@@ -379,9 +379,16 @@ class LogStructuredRegistry(ParquetRegistry):
         tombstones, the plain union of segment scans IS the table (no
         seq column, no aggregate, no shuffle); otherwise the exact
         fold. A trun carries embedded tombstone rows, so its presence
-        (like a tomb's) flips to the fold."""
+        (like a tomb's) flips to the fold.
+
+        The union is ONE multi-path scan: a ``read.parquet`` per segment
+        launches one footer-inference job each, so a read would grow by
+        a job per delta between folds. ``mergeSchema`` null-fills a
+        column that older segments lack."""
         if self.insert_only and all(k not in ("tomb", "trun") for _, k, _ in segs):
-            return _union([self.spark.read.parquet(p) for _, _, p in segs])
+            return self.spark.read.option("mergeSchema", "true").parquet(
+                *[p for _, _, p in segs]
+            )
         return self._fold(segs)
 
     def _fold(
@@ -391,7 +398,9 @@ class LogStructuredRegistry(ParquetRegistry):
         map-side-combinable ``max_by`` aggregate over the union — no
         window, no sort. Tombstoned keys drop, unless ``keep_tombs``
         (a minor fold above a base): then tombstone winners stay as
-        rows so the base below still sees the deletions at read time."""
+        rows so the base below still sees the deletions at read time.
+        Each segment is read on its own (one footer job each, unlike
+        ``_table``'s union) because its rows are tagged with its seq."""
         add_tomb = not keep_tombs or any(k in ("tomb", "trun") for _, k, _ in segs)
         dfs = []
         for seq, _, p in segs:

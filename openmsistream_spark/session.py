@@ -17,6 +17,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's physical RAM, capped at 16g: a local-mode
+    driver heap larger than the machine gets the JVM OOM-killed
+    instead of spilling."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "openmsistream_spark",
     master: str | None = None,
@@ -62,7 +70,10 @@ def get_spark(
         # context creation — the ContextCleaner reads it once.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for key, val in (extra_conf or {}).items():
         builder = builder.config(key, val)

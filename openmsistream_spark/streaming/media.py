@@ -12,21 +12,26 @@ run_id="batch-<id>") rows. Batch B:
 1. decodes + fingerprints the batch's media (ONE Arrow stage — the
    batch operators, shared code),
 2. admits via ``incremental_fingerprint_neardup``: no prior admitted
-   fingerprint within ``max_hamming`` (Manku combination-key probe —
-   equi-join on near-singleton buckets at ANY ledger size), no
+   fingerprint within ``max_hamming`` (a broadcast nested-loop Hamming
+   probe of the ledger against the bounded micro-batch, or the
+   bloom-gated combo-index sidecar past ``phash.NLJ_PAIR_BUDGET``), no
    smaller-id within-batch match, ledger upsert keyed on media_id,
 3. writes the admitted (media_id, fingerprint) rows to ``batch=<id>``
    (partition overwrite — the idempotent sink shape).
 
 Replay identity holds by the incremental operator's own contract: a
-replayed batch re-runs with the SAME run_id, every one of its items is
-blocked by its own ledger rows, the upsert replaces nothing, and the
-admitted set is re-derived FROM the ledger's run_id rows — byte-
-identical output, the exactly-once shape every ledger sink here shares.
+replayed batch re-runs with the SAME run_id, finds the ledger's rows
+tagged with it, and returns them verbatim — the committed decision,
+byte-identical output, the exactly-once shape every ledger sink here
+shares. A first run returns the rows it upserted, which are exactly
+the ledger's rows for its run_id.
 
-Scale: ledger rows are 24 bytes/admitted item; the per-batch probe is
-micro-batch x combo-keys vs ledger equi-join (never all-pairs, never
-corpus-rescans); fingerprints are computed once per batch. The params
+Scale: ledger rows are 24 bytes/admitted item; fingerprints are
+computed once per batch, onto the driver (the trigger bounds the
+batch); the per-batch probe streams the ledger's fingerprints past
+the broadcast batch (ledger x batch bit counts, no ledger shuffle)
+while that pair count stays within ``phash.NLJ_PAIR_BUDGET``, and past
+it the sidecar keeps the probe O(batch). The params
 sidecar pins (bits, blocks, max_hamming, modality) across restarts —
 a silently changed budget would admit a different replayed set, so the
 guard refuses instead (the round-12 advisory discipline), as does a
@@ -41,8 +46,8 @@ def _fingerprinter(modality: str, video_every_nth: int = 1):
     """modality -> (media frame, strict) -> ONE (media_id, fingerprint)
     row per media_id. Video reduces its per-frame hashes to the
     majority-fold representative (``video_representative_fingerprint``)
-    because the ledger contract is one-row-per-media_id — raw frame
-    output would make the media_id-keyed upsert keep an arbitrary
+    because the ledger contract is one-row-per-media_id — from raw
+    frame output the admission would keep only each video's first
     frame."""
     if modality == "image":
         from ..llm.phash import image_fingerprints

@@ -379,6 +379,78 @@ def test_incremental_empty_first_batch_creates_ledger(spark, tmp_path):
     assert {r.media_id for r in got} == {1, 2}
 
 
+def test_incremental_exact_path_job_budget(spark, tmp_path):
+    """The exact path's Spark job chain stays short and flat as the
+    log ledger gains segments: on a base plus 3 deltas, two
+    consecutive ``sidecar=False`` calls each launch at most 16 jobs,
+    and the second (one more delta live) no more than the first."""
+    import random
+
+    from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
+    from openmsistream_spark.operators.registry import make_registry
+
+    rng = random.Random(11)
+
+    def frame(lo, n, run_id=None):
+        rows = [(lo + i, _to_signed64(rng.getrandbits(64))) for i in range(n)]
+        df = spark.createDataFrame(rows, "media_id long, fingerprint long")
+        return df if run_id is None else df.withColumn("run_id", F.lit(run_id))
+
+    reg = make_registry(
+        spark, str(tmp_path / "led"), ["media_id"], backend="log", insert_only=True
+    )
+    # a base large enough that the deltas stay under the doubling rule:
+    # a compaction inside a call would add its own jobs
+    reg.upsert(frame(10_000, 2_000, "prefill"))
+    for d in range(3):
+        reg.upsert(frame(20_000 + 10 * d, 5, f"d{d}"))
+    sc = spark.sparkContext
+    jobs = []
+    for call in range(2):
+        group = f"phash-exact-budget-{call}"
+        sc.setJobGroup(group, "incremental_fingerprint_neardup")
+        try:
+            incremental_fingerprint_neardup(
+                frame(100 * call, 20), reg, run_id=f"R{call}", sidecar=False
+            )
+        finally:
+            sc.setJobGroup("", "")
+        # the status tracker is fed asynchronously by the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert all(n <= 16 for n in jobs), jobs
+    assert jobs[1] <= jobs[0], jobs
+
+
+def test_incremental_repeated_media_id_keeps_first_row(spark, tmp_path):
+    """A batch carrying one media_id twice with far-apart fingerprints
+    admits that id once, with its first row; the returned rows are
+    exactly the ledger's rows for the run, and a same-run_id replay
+    returns them again."""
+    from openmsistream_spark.llm.phash import incremental_fingerprint_neardup
+    from openmsistream_spark.operators.registry import make_registry
+
+    reg = make_registry(
+        spark, str(tmp_path / "led"), ["media_id"], backend="log", insert_only=True
+    )
+    first = _to_signed64(0x0123456789ABCDEF)
+    far = _to_signed64(0x7EDCBA9876543210)
+    batch = spark.createDataFrame(
+        [(1, _to_signed64(0x0F0F0F0F0F0F0F0F)), (7, first), (7, far)],
+        "media_id long, fingerprint long",
+    )
+
+    def run():
+        out = incremental_fingerprint_neardup(batch, reg, run_id="B0", sidecar=False)
+        return sorted((r.media_id, r.fingerprint) for r in out.collect())
+
+    got = run()
+    assert got == [(1, _to_signed64(0x0F0F0F0F0F0F0F0F)), (7, first)]
+    ledger = reg.read().filter(F.col("run_id") == "B0")
+    assert sorted((r.media_id, r.fingerprint) for r in ledger.collect()) == got
+    assert run() == got
+
+
 def _keep_first_reference(ledger_fps, batch, h):
     """Pure-Python admission rule: drop an item within ``h`` of any
     ledger fingerprint, then drop a survivor within ``h`` of a smaller

@@ -231,6 +231,41 @@ def test_log_registry_insert_only_skips_fold(spark, tmp):
     assert reg.read().count() == 2000
 
 
+def test_log_registry_union_read_is_one_job(spark, tmp):
+    """The insert-only union over a base plus 5 deltas is one
+    multi-path scan: ``read()`` launches a single schema-inference job
+    however many segments are live (one per segment before), and
+    still returns every row, a column only later deltas carry
+    null-filled in the older ones."""
+    from openmsistream_spark.operators.registry import make_registry
+
+    reg = make_registry(
+        spark, f"{tmp}/log_1job", ["k"], backend="log", insert_only=True,
+        major_compaction="manual",
+    )
+    reg.upsert(spark.createDataFrame([(f"b{i}", i) for i in range(50)], "k string, v long"))
+    want = {(f"b{i}", i, None) for i in range(50)}
+    for d in range(5):
+        if d < 3:
+            reg.upsert(spark.createDataFrame([(f"d{d}", d)], "k string, v long"))
+            want.add((f"d{d}", d, None))
+        else:
+            reg.upsert(
+                spark.createDataFrame([(f"d{d}", d, "r")], "k string, v long, run_id string")
+            )
+            want.add((f"d{d}", d, "r"))
+    assert [k for _, k, _ in reg._segments()] == ["base"] + ["delta"] * 5
+    sc = spark.sparkContext
+    sc.setJobGroup("log-union-read", "registry read")
+    try:
+        df = reg.read()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker lags the bus
+    assert len(sc.statusTracker().getJobIdsForGroup("log-union-read")) <= 1
+    assert {(r.k, r.v, r.run_id) for r in df.collect()} == want
+
+
 def test_log_registry_refuses_foreign_format(spark, tmp):
     """backend='log' on an existing parquet-format registry must refuse,
     not silently read an empty ledger (which would re-admit everything
