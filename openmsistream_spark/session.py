@@ -16,6 +16,9 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+#: the directory holding this package, for the Python workers' PYTHONPATH
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_memory() -> str:
     """Half the machine's physical RAM, capped at 16g: a local-mode
@@ -43,6 +46,16 @@ def get_spark(
         1000-executor clusters busy without tiny-task overhead.
       - UTC session timezone: deterministic timestamp semantics
         (matches DuckDB/parquet physical values).
+      - Worker daemon ``openmsistream_spark.worker_daemon`` (``local*``
+        masters only): before Python 3.13 every Python task re-parsed
+        each zip on the worker's ``sys.path`` (26,672 central-directory
+        entries: a one-task RDD job took ~300 ms, ~120 ms with the
+        daemon, on 4 cores); the daemon re-reads a zip only when it
+        changed. Local only, because there the driver's filesystem
+        is the worker's: ``spark.executorEnv.PYTHONPATH`` gets this
+        package's parent directory so the daemon can start whatever the
+        driver's cwd. Sessions not built here (an external driver's)
+        keep Spark's stock daemon.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -75,7 +88,16 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
         )
     )
-    for key, val in (extra_conf or {}).items():
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        caller_path = extra_conf.get("spark.executorEnv.PYTHONPATH")
+        extra_conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (_PACKAGE_PARENT, caller_path) if p
+        )
+        builder = builder.config(
+            "spark.python.daemon.module", "openmsistream_spark.worker_daemon"
+        )
+    for key, val in extra_conf.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -21,11 +21,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_reconstructed_files(batch_df: DataFrame, out_dir: str) -> int:
+def write_reconstructed_files(batch_df: DataFrame, out_dir: str) -> None:
     """Write completed-file rows (rel_path, file_bytes, file_hash) to
     disk, preserving subdirectories (reference:
     data_file_download_directory.py:74-174). Idempotent: a file whose
-    on-disk sha512 already matches is skipped. Returns files written.
+    on-disk sha512 already matches is skipped. Returns ``None``: the
+    files are written on executors and no count comes back.
 
     Runs on executors via foreachPartition — the driver never holds file
     bytes.
@@ -72,7 +73,6 @@ def write_reconstructed_files(batch_df: DataFrame, out_dir: str) -> int:
             os.replace(tmp, target)  # atomic publish
 
     rows.rdd.foreachPartition(_write_partition)
-    return 0
 
 
 def reconstruction_sink(completed: DataFrame, out_dir: str, checkpoint_dir: str):
