@@ -128,8 +128,8 @@ class ParquetRegistry:
         concurrent ``upsert`` can drop the upsert's rows. Callers must
         serialize replaces with any live writer of the same registry —
         e.g. run compaction inside the stream's own ``foreachBatch``
-        (see streaming/anomaly.py ``compact_every``) or with the stream
-        stopped."""
+        (``compact_every``, scheduled by streaming/batch_sink.py) or with
+        the stream stopped."""
         self._overwrite(df)
 
     def upsert(self, updates: DataFrame) -> None:

@@ -41,6 +41,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .batch_sink import batch_sink
+from .ledger_fold import fold_count_ledger
+
 # decimal scales shared with the batch twin (queries_extras.py
 # zscore_anomaly_events) so stream and batch flag identically
 _S1_T = "decimal(30,8)"
@@ -136,16 +139,13 @@ def anomaly_stream_sink(
     ["key", "batch"])``. Returns the configured ``DataStreamWriter`` —
     caller picks the trigger and calls ``.start()``.
 
-    ``compact_every=N`` folds the ledger every N batches, INSIDE this
-    callback, after the batch's own upsert — Structured Streaming runs
-    foreachBatch invocations strictly one at a time, so the fold can
-    never interleave with a delta upsert (the race a free-standing
-    ``compact_moment_ledger`` call against a live stream would have).
-    It folds only ``batch <= batch_id - 1``: on a restart the replayed
+    ``compact_every=N`` runs ``compact_moment_ledger`` up to the
+    previous batch every N batches, after the batch's own upsert, on
+    ``batch_sink``'s serialized schedule: on a restart the replayed
     batch_id re-reads strictly-earlier prefix sums, which the fold
     preserves exactly."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         ledger = moments_registry.read()
         flagged = score_batch_against_ledger(
             batch_df,
@@ -156,18 +156,16 @@ def anomaly_stream_sink(
             z_threshold=z_threshold,
             min_n=min_n,
         )
-        flagged.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(flagged)
         deltas = _batch_deltas(batch_df, key_col, value_col).withColumn(
             "batch", F.lit(int(batch_id))
         )
         moments_registry.upsert(deltas.select("key", "batch", "n", "s1", "s2"))
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_moment_ledger(moments_registry, batch_id - 1)
 
-    return (
-        events.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        events, "anomaly_stream_sink", out_dir, checkpoint_dir, step,
+        registry=moments_registry, compact_every=compact_every,
+        compact=lambda upto: compact_moment_ledger(moments_registry, upto),
     )
 
 
@@ -186,19 +184,4 @@ def compact_moment_ledger(moments_registry, upto_batch: int) -> None:
     runs inside the stream's own foreachBatch, which Structured
     Streaming serializes) or call this only while the query is stopped.
     """
-    ledger = moments_registry.read()
-    if ledger is None:
-        return
-    old = ledger.filter(F.col("batch") <= upto_batch)
-    folded = old.groupBy("key").agg(
-        F.lit(int(upto_batch)).cast("long").alias("batch"),
-        F.sum("n").alias("n"),
-        F.sum("s1").cast(_S1_T).alias("s1"),
-        F.sum("s2").cast(_S2_T).alias("s2"),
-    )
-    kept = ledger.filter(F.col("batch") > upto_batch)
-    moments_registry.replace(
-        kept.select("key", "batch", "n", "s1", "s2").unionByName(
-            folded.select("key", "batch", "n", "s1", "s2")
-        )
-    )
+    fold_count_ledger(moments_registry, upto_batch, ["n", "s1", "s2"])

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..llm.bloom import bloom_from_positions, gram_novelty, positions_col
 from ..llm.dedup import word_shingles
+from .batch_sink import batch_sink
 
 
 def batch_novelty_against_ledger(
@@ -86,27 +87,6 @@ def batch_positions(
     )
 
 
-def _params_guard(pos_registry, n: int, m_bits: int, k: int):
-    """Persist (n, m_bits, k) beside the position ledger and refuse a
-    restart under DIFFERENT parameters: a smaller ``m_bits`` silently
-    corrupts novelty verdicts (stale high positions alias into the
-    smaller mask), a larger one fails opaquely inside the executor-side
-    mask build, and a different ``n``/``k`` changes what a position
-    MEANS. Shared write-once/validate-always sidecar discipline
-    (``streaming/params_guard.py`` — the HLL/CMS sinks use it too).
-    Returns the per-batch guard closure — the sink calls it at the top
-    of every ``_write`` to close the build-to-first-batch race."""
-    from .params_guard import sidecar_batch_guard
-
-    guard = sidecar_batch_guard(
-        pos_registry,
-        {"n": n, "m_bits": m_bits, "k": k},
-        "bloom_novelty_stream_sink",
-    )
-    guard()  # fail fast at build; re-checked per batch (race window)
-    return guard
-
-
 def bloom_novelty_stream_sink(
     docs,
     pos_registry,
@@ -126,20 +106,16 @@ def bloom_novelty_stream_sink(
     positions.
 
     ``pos_registry`` must be ``make_registry(spark, path, ["pos"])``.
-    The sketch parameters are persisted beside the ledger on first
-    start and VALIDATED on every restart (see ``_params_guard``) —
-    ledger positions are only meaningful under the (n, m_bits, k) that
-    wrote them. Returns the configured ``DataStreamWriter`` — caller
-    picks the trigger and calls ``.start()``."""
-    from .params_guard import refuse_lost_ledger
+    ``(n, m_bits, k)`` are persisted beside the ledger on first start
+    and VALIDATED on every restart (``batch_sink``'s params guard): a
+    smaller ``m_bits`` silently corrupts novelty verdicts (stale high
+    positions alias into the smaller mask), a larger one fails opaquely
+    inside the executor-side mask build, and a different ``n``/``k``
+    changes what a position MEANS. Returns the configured
+    ``DataStreamWriter`` — caller picks the trigger and calls
+    ``.start()``."""
 
-    _guard = _params_guard(pos_registry, n, m_bits, k)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _guard()
-        # past batch 0 a missing ledger was LOST: reading it as empty
-        # would mark every gram novel against outputs already written
-        refuse_lost_ledger(pos_registry, batch_id, "bloom_novelty_stream_sink")
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         ledger = pos_registry.read()
         out = batch_novelty_against_ledger(
             batch_df,
@@ -151,7 +127,7 @@ def bloom_novelty_stream_sink(
             id_col=id_col,
             text_col=text_col,
         )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(out)
         new_pos = batch_positions(
             batch_df, n=n, m_bits=m_bits, k=k, id_col=id_col, text_col=text_col
         ).withColumn("first_batch", F.lit(int(batch_id)).cast("long"))
@@ -161,8 +137,7 @@ def bloom_novelty_stream_sink(
             new_pos = new_pos.join(ledger.select("pos"), "pos", "left_anti")
         pos_registry.upsert(new_pos)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        docs, "bloom_novelty_stream_sink", out_dir, checkpoint_dir, step,
+        registry=pos_registry, params={"n": n, "m_bits": m_bits, "k": k},
     )

@@ -41,6 +41,7 @@ from ..llm.dedup import (
     streaming_exact_dedup,
 )
 from ..llm.textstats import pii_redact, quality_filter
+from .batch_sink import batch_sink
 
 
 def curate_document_stream(
@@ -118,7 +119,10 @@ def curation_sink(
     state, not checkpoint-local) and overwrites its own partition with
     the same rows. This mirrors the reference's restart discipline,
     where the registry — not the consumer — owns progress truth
-    (data_file_stream_processor.py:85-95). Near-dups WITHIN one
+    (data_file_stream_processor.py:85-95). A ledger lost after batch 0
+    (its ``_params`` sidecar, written by ``incremental_minhash_dedup``,
+    survives) is refused rather than re-admitting against partitions
+    already written. Near-dups WITHIN one
     micro-batch are both new to the ledger, so by default both are
     admitted (the window is seconds wide); set
     ``collapse_batch_neardups=True`` to run the batch-level
@@ -143,7 +147,7 @@ def curation_sink(
     Returns the configured ``DataStreamWriter`` — caller picks the
     trigger and calls ``.start()``."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         out = batch_df
         if neardup_registry is not None:
             conf = dict(neardup_conf or {})
@@ -178,12 +182,12 @@ def curation_sink(
                 run_id=f"batch-{batch_id}",
                 **conf,
             )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        path = emit(out)
         if metrics_registry is not None:
             spark = batch_df.sparkSession
             # count the landed partition (cheap scan of what was just
             # written) rather than re-executing the dedup plan
-            n_admitted = spark.read.parquet(f"{out_dir}/batch={batch_id}").count()
+            n_admitted = spark.read.parquet(path).count()
             metrics_registry.upsert(
                 spark.createDataFrame(
                     [(int(batch_id), batch_df.count(), n_admitted)],
@@ -191,8 +195,7 @@ def curation_sink(
                 )
             )
 
-    return (
-        curated.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        curated, "curation_sink", out_dir, checkpoint_dir, step,
+        registry=neardup_registry,
     )

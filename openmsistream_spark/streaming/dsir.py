@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.dsir import score_with_table, table_feature_config
+from .batch_sink import batch_sink
 
 
 def dsir_select_stream_sink(
@@ -51,7 +52,7 @@ def dsir_select_stream_sink(
     # re-execute the full table build every batch (round-8 advisory)
     cfg = table_feature_config(ratio_table)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         scored = score_with_table(
             batch_df, ratio_table, id_col=id_col, text_col=text_col, config=cfg
         )
@@ -60,10 +61,6 @@ def dsir_select_stream_sink(
             .join(scored.filter(F.col("score") >= threshold), id_col)
             .select(id_col, text_col, "n_tokens", "score")
         )
-        admitted.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(admitted)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return batch_sink(docs, "dsir_select_stream_sink", out_dir, checkpoint_dir, step)

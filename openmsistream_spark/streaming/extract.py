@@ -27,6 +27,7 @@ from ..llm.extract import (
     extract_main_content,
     normalize_text,
 )
+from .batch_sink import batch_sink
 
 
 def crawl_front_transform(
@@ -75,7 +76,7 @@ def crawl_front_sink(
     Returns the configured ``DataStreamWriter`` — caller picks the
     trigger and calls ``.start()``."""
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         out = crawl_front_transform(
             batch_df,
             html_col=html_col,
@@ -84,10 +85,6 @@ def crawl_front_sink(
             min_text_len=min_text_len,
             apply_line_rules=apply_line_rules,
         )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(out)
 
-    return (
-        pages.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return batch_sink(pages, "crawl_front_sink", out_dir, checkpoint_dir, step)

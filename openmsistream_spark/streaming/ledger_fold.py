@@ -3,10 +3,9 @@ ledgers: collapse every delta row with ``batch <= upto_batch`` into one
 row per key (tagged ``batch = upto_batch``), preserving every
 ``batch < B`` prefix sum for B > upto_batch.
 
-One implementation serves the quota sink (``n_admitted``) and the
-census sink (``n_docs``); streaming/anomaly.py keeps its own fold
-because its moment ledger sums THREE decimal columns with explicit
-type pinning, not one counter.
+One implementation serves the quota sink (``n_admitted``), the census
+sink (``n_docs``) and the anomaly sink's moment ledger (``n``, ``s1``,
+``s2``).
 
 Run it only for batches the stream has COMMITTED past (at most
 ``newest - 1``): a checkpoint restart replays only the in-flight
@@ -19,24 +18,30 @@ with the stream's upserts (run inside the sink's own foreachBatch via
 
 from __future__ import annotations
 
+from typing import Sequence
+
 from pyspark.sql import functions as F
 
 
-def fold_count_ledger(registry, upto_batch: int, sum_col: str) -> None:
-    """Fold ``sum_col`` deltas with ``batch <= upto_batch`` to one row
-    per key. Key columns are everything except ``batch``/``sum_col``."""
+def fold_count_ledger(registry, upto_batch: int, sum_cols: Sequence[str]) -> None:
+    """Fold ``sum_cols`` deltas with ``batch <= upto_batch`` to one row
+    per key. ``batch`` and each sum are cast back to their ledger type
+    (a decimal sum widens its precision), so the fold keeps the ledger
+    schema. Key columns are everything except ``batch`` and
+    ``sum_cols``."""
     ledger = registry.read()
     if ledger is None:
         return
-    key_cols = [c for c in ledger.columns if c not in ("batch", sum_col)]
+    types = dict(ledger.dtypes)
+    key_cols = [c for c in ledger.columns if c != "batch" and c not in sum_cols]
     folded = (
         ledger.filter(F.col("batch") <= upto_batch)
         .groupBy(*key_cols)
         .agg(
-            F.lit(int(upto_batch)).cast("long").alias("batch"),
-            F.sum(sum_col).alias(sum_col),
+            F.lit(int(upto_batch)).cast(types["batch"]).alias("batch"),
+            *[F.sum(c).cast(types[c]).alias(c) for c in sum_cols],
         )
     )
     kept = ledger.filter(F.col("batch") > upto_batch)
-    cols = key_cols + ["batch", sum_col]
+    cols = [*key_cols, "batch", *sum_cols]
     registry.replace(kept.select(*cols).unionByName(folded.select(*cols)))

@@ -42,6 +42,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .batch_sink import batch_sink
+
+
 def _fingerprinter(modality: str, video_every_nth: int = 1):
     """modality -> (media frame, strict) -> ONE (media_id, fingerprint)
     row per media_id. Video reduces its per-frame hashes to the
@@ -112,7 +115,6 @@ def media_neardup_stream_sink(
     ``.start()``."""
     fingerprint = _fingerprinter(modality, video_every_nth)
     from ..llm.phash import incremental_fingerprint_neardup
-    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
     params = {
         "modality": modality,
@@ -124,16 +126,8 @@ def media_neardup_stream_sink(
         # only video consumes the sampling rate; keeping the key out of
         # image/audio sidecars leaves their existing checkpoints valid
         params["video_every_nth"] = video_every_nth
-    guard = sidecar_batch_guard(
-        fp_registry,
-        params,
-        "media_neardup_stream_sink",
-    )
-    guard()  # fail fast at build; re-checked per batch (race window)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        guard()
-        refuse_lost_ledger(fp_registry, batch_id, "media_neardup_stream_sink")
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         fps = fingerprint(batch_df, strict)
         admitted = incremental_fingerprint_neardup(
             fps,
@@ -143,10 +137,9 @@ def media_neardup_stream_sink(
             max_hamming=max_hamming,
             run_id=f"batch-{batch_id}",
         )
-        admitted.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(admitted)
 
-    return (
-        media.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        media, "media_neardup_stream_sink", out_dir, checkpoint_dir, step,
+        registry=fp_registry, params=params,
     )

@@ -48,6 +48,8 @@ from ..queries_extras8 import (
     temperature_copy_hash,
     temperature_rate_frame,
 )
+from .batch_sink import batch_sink
+from .ledger_fold import fold_count_ledger
 
 
 def batch_temperature_resample(
@@ -156,27 +158,8 @@ def temperature_resample_stream_sink(
     [key_col, "batch"])``. ``alpha`` and the column names are
     sidecar-guarded (a silently changed alpha would break replay
     identity). Returns the configured ``DataStreamWriter``."""
-    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
-    guard = sidecar_batch_guard(
-        census_registry,
-        # params are (str | int): pin alpha via its millionths
-        {
-            "alpha_micros": int(round(alpha * 1_000_000)),
-            "key_col": key_col,
-            "id_col": id_col,
-        },
-        "temperature_resample_stream_sink",
-    )
-    guard()
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        guard()
-        # census loss past batch 0 must refuse, not silently rate-1 the
-        # whole batch against an empty census (round-12 advisory)
-        refuse_lost_ledger(
-            census_registry, batch_id, "temperature_resample_stream_sink"
-        )
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         ledger = census_registry.read()
         out = batch_temperature_resample(
             batch_df,
@@ -186,7 +169,7 @@ def temperature_resample_stream_sink(
             key_col=key_col,
             id_col=id_col,
         )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(out)
         deltas = (
             batch_df.groupBy(key_col)
             .agg(F.count("*").alias("n_docs"))
@@ -194,13 +177,14 @@ def temperature_resample_stream_sink(
             .select(key_col, "batch", "n_docs")
         )
         census_registry.upsert(deltas)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_census_ledger(census_registry, batch_id - 1)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    # params are (str | int): pin alpha via its millionths
+    alpha_micros = int(round(alpha * 1_000_000))
+    params = {"alpha_micros": alpha_micros, "key_col": key_col, "id_col": id_col}
+    return batch_sink(
+        docs, "temperature_resample_stream_sink", out_dir, checkpoint_dir, step,
+        registry=census_registry, params=params, compact_every=compact_every,
+        compact=lambda upto: compact_census_ledger(census_registry, upto),
     )
 
 
@@ -209,6 +193,4 @@ def compact_census_ledger(census_registry, upto_batch: int) -> None:
     per key (tagged ``batch = upto_batch``) — same contract and
     serialization requirements as ``compact_quota_ledger`` (the shared
     ``ledger_fold.fold_count_ledger`` implements both)."""
-    from .ledger_fold import fold_count_ledger
-
-    fold_count_ledger(census_registry, upto_batch, "n_docs")
+    fold_count_ledger(census_registry, upto_batch, ["n_docs"])

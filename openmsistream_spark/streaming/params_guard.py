@@ -119,27 +119,3 @@ def refuse_lost_ledger(registry, batch_id: int, sink_name: str) -> None:
                 "fresh"
             )
 
-
-def sidecar_batch_guard(registry, params: dict[str, int | str], sink_name: str):
-    """Per-micro-batch form of the guard for foreachBatch sinks.
-
-    A builder-time check alone leaves a window: between a sink's
-    construction and its first committed batch the ledger does not
-    exist yet, so a SECOND builder with different parameters would
-    simply overwrite the sidecar and the two streams would mix
-    incompatible rows in one ledger. Calling the returned closure at
-    the top of every ``_write`` closes that window to the width of one
-    micro-batch: by any later batch the competing stream's ledger
-    exists, and the drifted parameters refuse by name. Once a check
-    has passed against an EXISTING ledger the closure becomes a no-op
-    (nothing further can drift under it); while the ledger is still
-    absent it keeps re-checking each batch."""
-    state = {"settled": False}
-
-    def guard() -> None:
-        if state["settled"]:
-            return
-        ensure_sidecar_params(registry, params, sink_name)
-        state["settled"] = registry.exists()
-
-    return guard

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..llm.dsir import table_feature_config
 from ..llm.quality import score_with_weights
+from .batch_sink import batch_sink
 
 
 def quality_filter_stream_sink(
@@ -49,7 +50,7 @@ def quality_filter_stream_sink(
     # an unmaterialized weight plan would re-run the fit every batch)
     cfg = table_feature_config(weights)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         scored = score_with_weights(
             batch_df, weights, id_col=id_col, text_col=text_col, config=cfg
         )
@@ -58,10 +59,6 @@ def quality_filter_stream_sink(
             .join(scored.filter(F.col("score") >= threshold), id_col)
             .select(id_col, text_col, "n_tokens", "score")
         )
-        admitted.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(admitted)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return batch_sink(docs, "quality_filter_stream_sink", out_dir, checkpoint_dir, step)

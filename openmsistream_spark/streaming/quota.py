@@ -42,6 +42,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .batch_sink import batch_sink
+from .ledger_fold import fold_count_ledger
+
 
 def batch_quota_admit(
     batch_df: DataFrame,
@@ -112,21 +115,8 @@ def quota_cap_stream_sink(
     turns that into a refusal instead of a silent exactly-once break.
     Returns the configured ``DataStreamWriter`` — caller picks the
     trigger and calls ``.start()``."""
-    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
-    guard = sidecar_batch_guard(
-        quota_registry,
-        {"quota": quota, "key_col": key_col, "id_col": id_col},
-        "quota_cap_stream_sink",
-    )
-    guard()  # fail fast at build; re-checked per batch (race window)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        guard()
-        # a missing ledger is 'no history' ONLY at batch 0: past that,
-        # ledger-absent + sidecar-present means the ledger was LOST and
-        # silently re-admitting quota per key would break exactly-once
-        refuse_lost_ledger(quota_registry, batch_id, "quota_cap_stream_sink")
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         ledger = quota_registry.read()
         admitted = batch_quota_admit(
             batch_df,
@@ -141,9 +131,7 @@ def quota_cap_stream_sink(
         # not twice; released before the batch commits
         admitted = admitted.persist()
         try:
-            admitted.write.mode("overwrite").parquet(
-                f"{out_dir}/batch={batch_id}"
-            )
+            emit(admitted)
             deltas = (
                 admitted.groupBy(key_col)
                 .agg(F.count("*").alias("n_admitted"))
@@ -154,15 +142,13 @@ def quota_cap_stream_sink(
             quota_registry.upsert(deltas)
         finally:
             admitted.unpersist()
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            # safe inside foreachBatch: Structured Streaming serializes
-            # _write calls, so the whole-table replace races nothing
-            compact_quota_ledger(quota_registry, batch_id - 1)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        docs, "quota_cap_stream_sink", out_dir, checkpoint_dir, step,
+        registry=quota_registry,
+        params={"quota": quota, "key_col": key_col, "id_col": id_col},
+        compact_every=compact_every,
+        compact=lambda upto: compact_quota_ledger(quota_registry, upto),
     )
 
 
@@ -177,6 +163,4 @@ def compact_quota_ledger(quota_registry, upto_batch: int) -> None:
     Concurrency contract: whole-table ``replace`` — MUST be serialized
     with the stream's upserts (pass ``compact_every=`` to the sink, or
     call only while the query is stopped)."""
-    from .ledger_fold import fold_count_ledger
-
-    fold_count_ledger(quota_registry, upto_batch, "n_admitted")
+    fold_count_ledger(quota_registry, upto_batch, ["n_admitted"])

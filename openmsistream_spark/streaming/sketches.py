@@ -48,6 +48,7 @@ from ..operators.sketches import (
     hll_estimate_from_registers,
     hll_registers,
 )
+from .batch_sink import batch_sink
 
 
 def merge_registers(
@@ -89,32 +90,20 @@ def hll_distinct_stream_sink(
     a different bucket space, and max-merging across them silently
     estimates nonsense. Returns the configured ``DataStreamWriter`` —
     caller picks the trigger and calls ``.start()``."""
-    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
-
-    _guard = sidecar_batch_guard(
-        register_registry, {"p": p}, "hll_distinct_stream_sink"
-    )
-    _guard()  # fail fast at build; re-checked per batch (race window)
     gcols = list(group_cols)
 
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _guard()
-        # past batch 0 a missing ledger was LOST: merging into nothing
-        # would restart the distinct counts from zero
-        refuse_lost_ledger(register_registry, batch_id, "hll_distinct_stream_sink")
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         regs = hll_registers(batch_df, key_col, gcols, p)
         merged = merge_registers(register_registry.read(), regs, gcols)
         # materialize before replace(): the merge plan reads the ledger
         # being rewritten
         merged = merged.localCheckpoint(eager=True)
         register_registry.replace(merged)
-        est = hll_estimate_from_registers(merged, gcols, p)
-        est.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(hll_estimate_from_registers(merged, gcols, p))
 
-    return (
-        events.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        events, "hll_distinct_stream_sink", out_dir, checkpoint_dir, step,
+        registry=register_registry, params={"p": p},
     )
 
 
@@ -143,29 +132,18 @@ def cms_stream_sink(
     double-counting them. Ledger growth is d*w rows per batch until
     compaction folds the strictly-earlier batches.
 
-    ``compact_every=N`` folds the ledger every N batches INSIDE this
-    callback, after the batch's own upsert — Structured Streaming runs
-    foreachBatch invocations strictly one at a time, so the fold can
-    never interleave with a delta upsert (the race a free-standing
-    ``compact_cms_ledger`` call against a live stream would have; see
-    its docstring). Only batches STRICTLY earlier than the current one
-    fold, so the one batch a checkpoint restart could replay still
-    replaces its own keyed rows.
+    ``compact_every=N`` runs ``compact_cms_ledger`` every N batches,
+    after the batch's own upsert, on ``batch_sink``'s serialized
+    schedule. Only batches STRICTLY earlier than the current one fold,
+    so the one batch a checkpoint restart could replay still replaces
+    its own keyed rows.
 
     ``(d, w)`` are persisted in a ``_params`` sidecar on first start
     and validated on restart (``streaming/params_guard.py``) — deltas
     from a different geometry alias into the wrong counters. Returns
     the configured ``DataStreamWriter``."""
-    from .params_guard import refuse_lost_ledger, sidecar_batch_guard
 
-    _guard = sidecar_batch_guard(delta_registry, {"d": d, "w": w}, "cms_stream_sink")
-    _guard()  # fail fast at build; re-checked per batch (race window)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _guard()
-        # past batch 0 a missing ledger was LOST: the counts would
-        # restart from this batch's deltas alone
-        refuse_lost_ledger(delta_registry, batch_id, "cms_stream_sink")
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         delta = cms_counters(
             batch_df, key_col, d=d, w=w, weight_col=weight_col
         ).withColumn("batch", F.lit(int(batch_id)).cast("long"))
@@ -175,14 +153,13 @@ def cms_stream_sink(
             .groupBy("i", "pos")
             .agg(F.sum("cnt").alias("cnt"))
         )
-        merged.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_cms_ledger(delta_registry)
+        emit(merged)
 
-    return (
-        events.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        events, "cms_stream_sink", out_dir, checkpoint_dir, step,
+        registry=delta_registry, params={"d": d, "w": w},
+        compact_every=compact_every,
+        compact=lambda _upto: compact_cms_ledger(delta_registry),
     )
 
 

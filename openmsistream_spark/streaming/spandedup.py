@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.spandedup import DEFAULT_SPAN_K, _merge_intervals, kgram_positions
+from .batch_sink import batch_sink
 
 
 def excise_batch_against_ledger(
@@ -152,17 +153,8 @@ def span_dedup_stream_sink(
     meaningful under the k-gram length and fingerprint mode that wrote
     them. Returns the configured ``DataStreamWriter`` — caller picks
     the trigger and calls ``.start()``."""
-    from .params_guard import sidecar_batch_guard
 
-    _guard = sidecar_batch_guard(
-        gram_registry,
-        {"k": k, "fingerprint": fingerprint},
-        "span_dedup_stream_sink",
-    )
-    _guard()  # fail fast at build; re-checked per batch (race window)
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        _guard()
+    def step(batch_df: DataFrame, batch_id: int, emit) -> None:
         ledger = gram_registry.read()
         excised = excise_batch_against_ledger(
             batch_df,
@@ -173,7 +165,7 @@ def span_dedup_stream_sink(
             text_col=text_col,
             fingerprint=fingerprint,
         )
-        excised.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        emit(excised)
         new_grams = (
             kgram_positions(
                 batch_df, k=k, id_col=id_col, text_col=text_col,
@@ -189,8 +181,7 @@ def span_dedup_stream_sink(
             new_grams = new_grams.join(ledger.select("gram"), "gram", "left_anti")
         gram_registry.upsert(new_grams)
 
-    return (
-        docs.writeStream.foreachBatch(_write)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
+    return batch_sink(
+        docs, "span_dedup_stream_sink", out_dir, checkpoint_dir, step,
+        registry=gram_registry, params={"k": k, "fingerprint": fingerprint},
     )

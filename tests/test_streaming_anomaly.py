@@ -122,8 +122,10 @@ def test_compaction_preserves_future_scoring(spark, dirs):
         for r in score_batch_against_ledger(probe, reg.read(), 2).collect()
     )
     assert [e for e, _ in before] == [300]
+    dtypes = reg.read().dtypes
     compact_moment_ledger(reg, upto_batch=1)
     led = reg.read()
+    assert led.dtypes == dtypes  # the fold keeps the ledger schema
     assert led.count() == 1  # folded to one row per key
     assert led.first().batch == 1
     after = sorted(
@@ -174,7 +176,7 @@ def test_in_stream_compaction_serialized_and_equivalent(spark, dirs):
     """compact_every folds the ledger INSIDE foreachBatch (serialized
     with the upserts by Structured Streaming), bounds the ledger, and
     leaves the alert stream identical to an uncompacted run."""
-    alerts = {}
+    alerts, schemas = {}, {}
     for tag, compact_every in (("plain", None), ("compacted", 2)):
         in_dir, out_dir, ckpt = (
             f"{dirs}/{tag}/in",
@@ -202,6 +204,7 @@ def test_in_stream_compaction_serialized_and_equivalent(spark, dirs):
             )
             assert q.awaitTermination(300)
         alerts[tag] = _read_alerts(spark, out_dir)
+        schemas[tag] = reg.read().dtypes
         if compact_every:
             # batches 0..3 ran; the fold at batch 2 collapsed <=1 into
             # one row per key — ledger holds that row + batches 2 and 3
@@ -210,3 +213,8 @@ def test_in_stream_compaction_serialized_and_equivalent(spark, dirs):
             assert led.agg(F.min("batch")).first()[0] == 1
     assert alerts["compacted"] == alerts["plain"]
     assert [a[0] for a in alerts["plain"]] == [200, 300]
+    # the fold keeps the ledger schema: each sum is cast back to the
+    # type the delta upserts wrote (a sum over decimal(30,8) widens to 38)
+    assert schemas["compacted"] == schemas["plain"]
+    assert dict(schemas["plain"])["s1"] == "decimal(38,8)"
+    assert dict(schemas["plain"])["s2"] == "decimal(38,12)"

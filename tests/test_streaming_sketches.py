@@ -1,6 +1,8 @@
 """Streaming HLL: durable register ledger, equivalence to the batch
 sketch over the concatenated stream, and algebraic replay idempotence."""
 
+from functools import partial
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -271,35 +273,38 @@ def test_sketch_sinks_refuse_parameter_drift(spark, tmp_path):
         )
 
 
-@pytest.mark.parametrize("sink", ["bloom", "hll", "cms"])
+@pytest.mark.parametrize("sink", ["bloom", "span", "curation", "hll", "cms"])
 def test_lost_ledger_refused_mid_stream(spark, tmp_path, sink):
     """Ledger gone + ``_params`` sidecar present + checkpoint past batch
     0 is only reachable by LOSING the ledger — each ledger sink must
-    refuse, not mark every gram novel or restart its counts from zero
-    against outputs already written."""
+    refuse, not mark every gram novel, re-admit every document or
+    restart its counts from zero against outputs already written."""
     from openmsistream_spark.streaming.bloom import bloom_novelty_stream_sink
+    from openmsistream_spark.streaming.curation import curation_sink
     from openmsistream_spark.streaming.sketches import cms_stream_sink
+    from openmsistream_spark.streaming.spandedup import span_dedup_stream_sink
 
-    if sink == "bloom":
-        schema, keys = "doc_id long, text string", ["pos"]
-        rows = [[(0, "a0 a1 a2 a3 a4 a5 a6 a7 a8")], [(1, "b0 b1 b2 b3 b4 b5 b6 b7")]]
-
-        def build(src, reg, out_dir, ckpt):
-            return bloom_novelty_stream_sink(src, reg, out_dir, ckpt, n=8,
-                                             m_bits=1 << 16, k=4)
-    else:
-        schema, rows = SCHEMA, BATCHES[:2]
-        if sink == "hll":
-            keys = ["event_type", "bucket"]
-
-            def build(src, reg, out_dir, ckpt):
-                return hll_distinct_stream_sink(src, reg, out_dir, ckpt, key_col="uid",
-                                                group_cols=["event_type"], p=P)
-        else:
-            keys = ["i", "pos", "batch"]
-
-            def build(src, reg, out_dir, ckpt):
-                return cms_stream_sink(src, reg, out_dir, ckpt, key_col="uid", d=3, w=64)
+    docs = "doc_id long, text string", [
+        [(0, "a0 a1 a2 a3 a4 a5 a6 a7 a8")], [(1, "b0 b1 b2 b3 b4 b5 b6 b7")]
+    ]
+    schema, rows, keys, build = {
+        "bloom": (*docs, ["pos"], lambda src, reg, out_dir, ckpt:
+                  bloom_novelty_stream_sink(src, reg, out_dir, ckpt, n=8,
+                                            m_bits=1 << 16, k=4)),
+        "span": (*docs, ["gram"], lambda src, reg, out_dir, ckpt:
+                 span_dedup_stream_sink(src, reg, out_dir, ckpt, k=4)),
+        "curation": (*docs, ["band", "band_sig", "doc_id"],
+                     lambda src, reg, out_dir, ckpt: curation_sink(
+                         src, out_dir, ckpt, neardup_registry=reg,
+                         neardup_text_col="text")),
+        "hll": (SCHEMA, BATCHES[:2], ["event_type", "bucket"],
+                lambda src, reg, out_dir, ckpt: hll_distinct_stream_sink(
+                    src, reg, out_dir, ckpt, key_col="uid",
+                    group_cols=["event_type"], p=P)),
+        "cms": (SCHEMA, BATCHES[:2], ["i", "pos", "batch"],
+                lambda src, reg, out_dir, ckpt: cms_stream_sink(
+                    src, reg, out_dir, ckpt, key_col="uid", d=3, w=64)),
+    }[sink]
 
     reg = make_registry(spark, str(tmp_path / "led"), keys)
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
@@ -316,3 +321,34 @@ def test_lost_ledger_refused_mid_stream(spark, tmp_path, sink):
     reg.fs.delete(reg.path)  # simulate loss; sidecar + checkpoint survive
     with pytest.raises(Exception, match="lost|NO ledger"):
         start(1).awaitTermination(300)
+
+
+@pytest.mark.parametrize("sink", ["anomaly", "mixing", "quota", "cms"])
+def test_bad_compact_every_refused_at_construction(spark, tmp_path, sink):
+    """``compact_every`` is None or an int >= 1: 0 used to switch
+    compaction off silently and a negative value compacted on a reversed
+    schedule (4 % -2 == 0). The refusal names the sink and the parameter
+    and comes before the params sidecar is written."""
+    from openmsistream_spark.streaming.anomaly import anomaly_stream_sink
+    from openmsistream_spark.streaming.mixing import (
+        temperature_resample_stream_sink,
+    )
+    from openmsistream_spark.streaming.quota import quota_cap_stream_sink
+    from openmsistream_spark.streaming.sketches import cms_stream_sink
+
+    build, name = {
+        "anomaly": (anomaly_stream_sink, "anomaly_stream_sink"),
+        "mixing": (temperature_resample_stream_sink,
+                   "temperature_resample_stream_sink"),
+        "quota": (partial(quota_cap_stream_sink, quota=2), "quota_cap_stream_sink"),
+        "cms": (partial(cms_stream_sink, key_col="uid"), "cms_stream_sink"),
+    }[sink]
+    (tmp_path / "in").mkdir()
+    src = spark.readStream.schema(SCHEMA).parquet(str(tmp_path / "in"))
+    reg = make_registry(spark, str(tmp_path / "led"), ["k", "batch"])
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    for bad in (0, -2, 1.5, True):
+        with pytest.raises(ValueError, match=f"{name}: compact_every={bad!r}"):
+            build(src, reg, out_dir, ckpt, compact_every=bad)
+    assert not reg.fs.exists(reg.path + "_params")
+    build(src, reg, out_dir, ckpt, compact_every=3)

@@ -1,6 +1,8 @@
 """Streaming span excision: durable gram ledger, equivalence to the
 batch keep-first operator, and exactly-once replay."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from openmsistream_spark.llm.spandedup import excise_duplicated_spans
@@ -180,3 +182,26 @@ def test_span_sink_refuses_gram_parameter_drift(spark, tmp_path):
             src, reg, str(tmp_path / "out"), str(tmp_path / "ckpt4"),
             k=4, fingerprint="text",
         )
+
+
+def test_empty_first_batch_still_creates_the_ledger(spark, tmp_path):
+    """A zero-row batch 0 upserts no grams, yet that upsert must still
+    create the ledger: otherwise batch 1 would meet ledger-absent +
+    sidecar-present past batch 0 and be refused as a LOST ledger."""
+    in_dir, out_dir, ckpt = (
+        str(tmp_path / "in"),
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+    )
+    reg = make_registry(spark, str(tmp_path / "grams"), ["gram"])
+    spark.createDataFrame([], SCHEMA).write.parquet(f"{in_dir}/b=0")
+    _run(spark, in_dir, out_dir, ckpt, reg)
+    assert os.path.isdir(f"{out_dir}/batch=0")  # batch 0 ran, on no rows
+    assert reg.exists()
+    spark.createDataFrame(BATCHES[0], SCHEMA).coalesce(1).write.parquet(
+        f"{in_dir}/b=1"
+    )
+    _run(spark, in_dir, out_dir, ckpt, reg)
+    got = {r.doc_id: (r.batch, r.n_tokens_removed)
+           for r in spark.read.parquet(out_dir).collect()}
+    assert got == {0: (1, 0), 1: (1, 0)}
